@@ -15,7 +15,7 @@ object Tables {
     spark.read.parquet(s"$sfDir/$name.parquet")
 
   /** Drop orphaned cached/localCheckpoint'd RDD blocks and cached plans.
-    * Bench and Verify call this between queries — re-invoking a query fn
+    * Verify calls this between queries — re-invoking a query fn
     * re-creates its checkpoints, and the previous generation would
     * otherwise stay pinned until the heap fills and late queries measure
     * GC instead of their plan.
@@ -69,10 +69,6 @@ object Tables {
     * pre-shuffle sort.
     */
   def spread(df: DataFrame, key: String): DataFrame = {
-    // escape hatch + A/B toggle (graft.AbSpread interleaves both arms in
-    // one session so host-load noise cannot masquerade as a delta)
-    if (df.sparkSession.conf.get("spark.graft.spread", "on") == "off")
-      return df
     // r17 hardening (ADVICE): the width probe below builds `df.rdd`,
     // which under AQE EXECUTES any upstream exchange eagerly — and the
     // real query then re-executes it (no reuse across executions). Every

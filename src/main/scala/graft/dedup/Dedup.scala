@@ -73,11 +73,9 @@ object Dedup {
     // the CPU (sf1 event log: two 2-task stages of 1.3-1.5 s in a 4.5 s
     // td05). The keyed repartition REPLACES the exchange distinct adds
     // anyway — same shuffle bytes, REPARTITION_BY_NUM is exempt from
-    // coalescing. spark.graft.verifywidth=off restores the pre-r17 plan.
-    val spark = bandsDf.sparkSession
-    (if (spark.conf.get("spark.graft.verifywidth", "on") == "off") raw
-     else raw.repartition(spark.sparkContext.defaultParallelism,
-       col("id_a"), col("id_b")))
+    // coalescing.
+    raw.repartition(bandsDf.sparkSession.sparkContext.defaultParallelism,
+        col("id_a"), col("id_b"))
       .distinct()
   }
 
@@ -127,17 +125,13 @@ object Dedup {
     * when the toks relation is past the planner's own broadcast
     * threshold (i.e. the id-keyed join will shuffle anyway — the pin
     * re-labels an existing exchange); under it the joins broadcast and a
-    * pin would add a shuffle round. `spark.graft.verifywidth=off`
-    * disables for interleaved A/B.
+    * pin would add a shuffle round.
     */
   private def verifyWidthPin(toksRel: DataFrame): Boolean = {
-    val spark = toksRel.sparkSession
-    spark.conf.get("spark.graft.verifywidth", "on") != "off" && {
-      val bytes = toksRel.queryExecution.optimizedPlan.stats.sizeInBytes
-      val thresh = org.apache.spark.sql.internal.SQLConf.get
-        .autoBroadcastJoinThreshold
-      thresh >= 0 && bytes > thresh
-    }
+    val bytes = toksRel.queryExecution.optimizedPlan.stats.sizeInBytes
+    val thresh = org.apache.spark.sql.internal.SQLConf.get
+      .autoBroadcastJoinThreshold
+    thresh >= 0 && bytes > thresh
   }
 
   /** End-to-end MinHash-LSH near-dup pairs: signature → bands → candidate
@@ -152,12 +146,12 @@ object Dedup {
       idCol)
     val j1 = cands
       .join(base.select(col(idCol).as("id_a"), col("toks").as("toks_a")), "id_a")
-    // r17: pin the LAST verify exchange's width (spark.graft.verifywidth,
-    // off = pre-r17). The exact-Jaccard stage is CPU-per-pair over small
-    // rows, so AQE's byte-based coalescing folds it to 1-2 tasks (sf1
-    // event log: two 2-task stages of 1.3-1.5 s each inside a 4.5 s
-    // query). The keyed repartition REPLACES the ENSURE_REQUIREMENTS
-    // exchange the id_b join needs anyway — same shuffle bytes — but
+    // r17: pin the LAST verify exchange's width. The exact-Jaccard
+    // stage is CPU-per-pair over small rows, so AQE's byte-based
+    // coalescing folds it to 1-2 tasks (sf1 event log: two 2-task
+    // stages of 1.3-1.5 s each inside a 4.5 s query). The keyed
+    // repartition REPLACES the ENSURE_REQUIREMENTS exchange the id_b
+    // join needs anyway — same shuffle bytes — but
     // REPARTITION_BY_NUM is exempt from AQE coalescing, so the verify
     // runs at the session's parallelism. Applied ONLY when the toks side
     // is past the planner's broadcast threshold (the same criterion the
@@ -260,25 +254,19 @@ object Dedup {
     // (38 jobs/rep, overhead-dominated). The shingle pass stays on the
     // scan's own width; at real scale the input is already wide.
     //
-    // r17 (spark.graft.containspread, default on; off = the r16 plan for
-    // interleaved A/B): the r16 event logs show the three FAT stages all
-    // run on ONE task — not because the scan is narrow but because AQE
-    // coalesces their shuffle reads BY BYTES (pair/prefix rows are a few
-    // MB) while the stages are CPU-bound (shingle arrays, rank window,
+    // r17: the r16 event logs show the three FAT stages all run on ONE
+    // task — not because the scan is narrow but because AQE coalesces
+    // their shuffle reads BY BYTES (pair/prefix rows are a few MB) while
+    // the stages are CPU-bound (shingle arrays, rank window,
     // sorted-intersect verify). Keyed `repartition(p, cols)` pins those
     // three exchanges at defaultParallelism: REPARTITION_BY_NUM is
     // exempt from AQE coalescing, the keys are real (deterministic under
     // retry), and p tracks the session — no local constant. The r16
     // loss mechanism (width propagating through EVERY pass) does not
     // recur: each repartition sits where an Exchange already was.
-    val spreadP =
-      if (spark.conf.get("spark.graft.containspread", "on") == "off") 0
-      else spark.sparkContext.defaultParallelism
-    val setsIn =
-      if (spreadP > 0)
-        graft.Tables.spread(df.select(col(idCol), col(textCol)), idCol)
-      else df
-    val sets = setsIn.select(col(idCol),
+    val spreadP = spark.sparkContext.defaultParallelism
+    val sets = graft.Tables.spread(df.select(col(idCol), col(textCol)), idCol)
+      .select(col(idCol),
         graft.functions.VectorExpressions
           .distinct_shingles(col(textCol), shingleN, sorted = true)
           .as("toks"))
@@ -287,9 +275,8 @@ object Dedup {
     val freq = tok.groupBy("t").agg(count(lit(1)).cast("bigint").as("df"))
     // the rank window runs ONCE (checkpointed — docs x prefix rows, tiny
     // next to the corpus); bands filter the materialized prefix table
-    val prefIn = tok.join(freq, Seq("t"))
-    val prefAll = (if (spreadP > 0) prefIn.repartition(spreadP, col(idCol))
-      else prefIn)
+    val prefAll = tok.join(freq, Seq("t"))
+      .repartition(spreadP, col(idCol))
       .withColumn("rn", row_number().over(
         Window.partitionBy(col(idCol)).orderBy(col("df").asc, col("t").asc)))
       .filter(col("rn") <= prefix)
@@ -376,9 +363,7 @@ object Dedup {
       // repartition replaces the exchange `distinct` would add anyway —
       // same shuffle, but AQE cannot coalesce the CPU-bound verify side
       // down to one task on byte estimates
-      (if (spreadP > 0)
-        raw.repartition(spreadP, col("id_a"), col("id_b"))
-      else raw).distinct()
+      raw.repartition(spreadP, col("id_a"), col("id_b")).distinct()
     }
     def stratum(suffix: String, modulo: Int, chunk: Int): DataFrame = {
       val base =

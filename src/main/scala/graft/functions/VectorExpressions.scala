@@ -49,6 +49,10 @@ object VectorExpressions {
   /** Dot product of two `array<float>` columns in double precision.
     * Bit-equal to `aggregate(zip_with(a, b, (x,y) => double(x)*double(y)),
     * 0.0, _+_)` — sequential left fold.
+    * Both inputs must have EQUAL length: on unequal inputs this folds
+    * over the shorter prefix while `zip_with` pads the shorter side with
+    * nulls, so the bit-equality holds only at equal length. Every caller
+    * passes fixed-`dims` vectors.
     */
   case class FloatVecDot(left: Expression, right: Expression)
       extends BinaryExpression {
@@ -97,6 +101,10 @@ object VectorExpressions {
     * interpreted HOF chain (opt brief rule 4: codegen the hot path; this
     * is the PQ kernel, evaluated corpus × m × k times in
     * encode/refine/ADC).
+    * Both inputs must have EQUAL length: on unequal inputs this folds
+    * over the shorter prefix while `zip_with` pads the shorter side with
+    * nulls, so the bit-equality holds only at equal length. Every caller
+    * passes fixed-`dims` vectors.
     */
   case class VecSqDist(left: Expression, right: Expression)
       extends BinaryExpression {
@@ -157,6 +165,10 @@ object VectorExpressions {
     * instead of once per ELEMENT (the interpreted lambda re-evaluates the
     * embedded norm subtree per element: O(dims²) boxed flops per row in
     * the residual-encoding hot path).
+    * Both inputs must have EQUAL length: on unequal inputs the output
+    * covers only the shorter prefix while `zip_with` pads the shorter
+    * side with nulls, so the bit-equality holds only at equal length.
+    * Every caller passes fixed-`dims` vectors.
     */
   case class FloatVecUnitDiff(left: Expression, right: Expression)
       extends BinaryExpression with CodegenFallback {
@@ -717,7 +729,7 @@ object VectorExpressions {
     * values per group per map task, so the shuffle carries ≤ groups×k×
     * partitions longs instead of the full exploded stream, and no sort of
     * that stream ever happens. Result-equal to the two-phase row_number
-    * window chain it replaces: the bottom-k MULTISET of h values is
+    * window chain it replaced: the bottom-k MULTISET of h values is
     * uniquely determined by the input multiset (ties at the boundary have
     * EQUAL h, so which row survives cannot change the kept values), and
     * the output array is sorted ascending. Memory is O(k) per group per

@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   * splits the hot side's rows across `saltFactor` sub-keys and replicates
   * the build side once per salt, restoring parallelism at the cost of a
   * `saltFactor`× build-side copy. AQE's skew-join handles sort-merge skew
-  * automatically (`spark.sql.adaptive.skewJoin.enabled`, on in Bench);
+  * automatically (`spark.sql.adaptive.skewJoin.enabled`, on by default);
   * salting remains the tool for aggregate-free broadcast misses and
   * stateful keys.
   */

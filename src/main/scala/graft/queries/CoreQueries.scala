@@ -825,97 +825,41 @@ object CoreQueries {
           .select(col("p_partkey"), col("p_brand"))),
           col("l_partkey") === col("p_partkey"))
         .select(col("o"), col("p_brand").as("b"))
-      // r17 NEGATIVE RESULT (examined, kept as-was): a one-shuffle
-      // rewrite — groupBy(o).collect_set(b) + map-side HOF pair/presence
-      // explode + one tiny grouped count (the kmvSetOps exact-audit
-      // shape) — was built behind spark.graft.basketagg and interleaved
-      // A/B'd. sf0.1: wash (min 2.14→2.11, med 2.47→2.28). sf1: LOSS
-      // (min 5.66→6.00, med 5.81→6.99): collect_set is a
-      // TypedImperativeAggregate, and past the ObjectHashAggregate
-      // sort-based fallback threshold (128 keys) a millions-of-orders
-      // groupBy degenerates to a full sort-aggregation of the fact
-      // table — strictly worse than the self-join it replaced, whose
-      // x/y sides reuse one exchange (ReuseExchange) and whose pair
-      // space is order-local. Oracle was green on the rewrite; reverted
-      // on the sf1 evidence.
-      if (s.conf.get("spark.graft.basketagg", "off") == "off") {
-        // baskets subtree: the distinct exchange is REUSED by the
-        // self-join's x/y sides within the one action
-        val baskets = joined.distinct()
-        val nOrders = baskets.select(countDistinct(col("o")).as("n"))
-        val brandCounts = baskets.groupBy(col("b"))
-          .agg(count(lit(1)).as("cb"))
-        val pairs = baskets.as("x")
-          .join(baskets.as("y"), col("x.o") === col("y.o") &&
-            col("x.b") < col("y.b"))
-          .groupBy(col("x.b").as("brand_a"), col("y.b").as("brand_b"))
-          .agg(count(lit(1)).as("pair_orders"))
-          .filter(col("pair_orders") >= 50)
-        pairs
-          .join(broadcast(brandCounts.select(col("b").as("brand_a"),
-            col("cb").as("ca"))), Seq("brand_a"))
-          .join(broadcast(brandCounts.select(col("b").as("brand_b"),
-            col("cb").as("cbb"))), Seq("brand_b"))
-          .crossJoin(broadcast(nOrders))
-          .select(col("brand_a"), col("brand_b"), col("pair_orders"),
-            expr("(1000000 * pair_orders) div n").as("support_ppm"),
-            expr("(1000000 * pair_orders) div ca").as("conf_a_to_b_ppm"),
-            expr("(1000000 * pair_orders) div cbb").as("conf_b_to_a_ppm"),
-            expr("(1000000 * pair_orders * n) div (ca * cbb)").as("lift_micro"))
-          .orderBy("brand_a", "brand_b")
-      } else {
-        // r17 shape: ONE corpus shuffle. Per-order distinct brand set
-        // via collect_set (dedup + pair space in one aggregation — the
-        // pair space is ORDER-LOCAL, so it explodes map-side from the
-        // sorted set exactly like kmvSetOps's exact audit), emitting in
-        // one tagged stream: (a<b) brand pairs, per-brand presence
-        // markers (bb null), and one per-order marker (ba null). One
-        // tiny grouped count then yields pair_orders / per-brand order
-        // counts / the order total; the pre-r17 self-join (which
-        // re-shuffled the baskets relation by order key twice) and the
-        // 4x-evaluated baskets subtree disappear. Result-identical:
-        // collect_set ≡ distinct per order, pairs/presence/total count
-        // the same sets (oracle-checked).
-        val sets = joined.groupBy(col("o"))
-          .agg(sort_array(collect_set(col("b"))).as("bs"))
-        val nullB = lit(null).cast("string")
-        val pairsE = flatten(transform(col("bs"), (a, i) =>
-          transform(
-            slice(col("bs"), i + lit(2),
-              greatest(size(col("bs")) - i - lit(1), lit(0))),
-            b2 => struct(a.as("ba"), b2.as("bb")))))
-        val singles = transform(col("bs"),
-          a => struct(a.as("ba"), nullB.as("bb")))
-        val marker = array(struct(nullB.as("ba"), nullB.as("bb")))
-        val counts = sets
-          .select(explode(concat(pairsE, singles, marker)).as("pr"))
-          .groupBy(col("pr.ba").as("ba"), col("pr.bb").as("bb"))
-          .agg(count(lit(1)).as("c"))
-        // consumed 3× inside ONE action — ReuseExchange dedups the
-        // identical aggregate subtree, so no checkpoint pin is needed
-        val pairs = counts
-          .filter(col("ba").isNotNull && col("bb").isNotNull &&
-            col("c") >= 50)
-          .select(col("ba").as("brand_a"), col("bb").as("brand_b"),
-            col("c").as("pair_orders"))
-        val brandCounts = counts
-          .filter(col("ba").isNotNull && col("bb").isNull)
-          .select(col("ba").as("b"), col("c").as("cb"))
-        val nOrders = counts.filter(col("ba").isNull)
-          .select(col("c").as("n"))
-        pairs
-          .join(broadcast(brandCounts.select(col("b").as("brand_a"),
-            col("cb").as("ca"))), Seq("brand_a"))
-          .join(broadcast(brandCounts.select(col("b").as("brand_b"),
-            col("cb").as("cbb"))), Seq("brand_b"))
-          .crossJoin(broadcast(nOrders))
-          .select(col("brand_a"), col("brand_b"), col("pair_orders"),
-            expr("(1000000 * pair_orders) div n").as("support_ppm"),
-            expr("(1000000 * pair_orders) div ca").as("conf_a_to_b_ppm"),
-            expr("(1000000 * pair_orders) div cbb").as("conf_b_to_a_ppm"),
-            expr("(1000000 * pair_orders * n) div (ca * cbb)").as("lift_micro"))
-          .orderBy("brand_a", "brand_b")
-      }
+      // r17 NEGATIVE RESULT: a one-shuffle rewrite — groupBy(o)
+      // .collect_set(b) + map-side HOF pair/presence explode + one tiny
+      // grouped count (the kmvSetOps exact-audit shape) — lost its
+      // interleaved A/B (OPTIMIZATION_r17.md). sf0.1: wash (min
+      // 2.14→2.11, med 2.47→2.28). sf1: LOSS (min 5.66→6.00, med
+      // 5.81→6.99): collect_set is a TypedImperativeAggregate, and past
+      // the ObjectHashAggregate sort-based fallback threshold (128 keys)
+      // a millions-of-orders groupBy degenerates to a full
+      // sort-aggregation of the fact table — strictly worse than this
+      // self-join, whose x/y sides reuse one exchange (ReuseExchange)
+      // and whose pair space is order-local.
+      // baskets subtree: the distinct exchange is REUSED by the
+      // self-join's x/y sides within the one action
+      val baskets = joined.distinct()
+      val nOrders = baskets.select(countDistinct(col("o")).as("n"))
+      val brandCounts = baskets.groupBy(col("b"))
+        .agg(count(lit(1)).as("cb"))
+      val pairs = baskets.as("x")
+        .join(baskets.as("y"), col("x.o") === col("y.o") &&
+          col("x.b") < col("y.b"))
+        .groupBy(col("x.b").as("brand_a"), col("y.b").as("brand_b"))
+        .agg(count(lit(1)).as("pair_orders"))
+        .filter(col("pair_orders") >= 50)
+      pairs
+        .join(broadcast(brandCounts.select(col("b").as("brand_a"),
+          col("cb").as("ca"))), Seq("brand_a"))
+        .join(broadcast(brandCounts.select(col("b").as("brand_b"),
+          col("cb").as("cbb"))), Seq("brand_b"))
+        .crossJoin(broadcast(nOrders))
+        .select(col("brand_a"), col("brand_b"), col("pair_orders"),
+          expr("(1000000 * pair_orders) div n").as("support_ppm"),
+          expr("(1000000 * pair_orders) div ca").as("conf_a_to_b_ppm"),
+          expr("(1000000 * pair_orders) div cbb").as("conf_b_to_a_ppm"),
+          expr("(1000000 * pair_orders * n) div (ca * cbb)").as("lift_micro"))
+        .orderBy("brand_a", "brand_b")
     }),
 
     // TPC-H Q1's pricing summary in EXACT integer cents: the discount

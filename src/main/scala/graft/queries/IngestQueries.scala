@@ -92,28 +92,6 @@ object IngestQueries {
       commit_lsn = begin.finalLsn)
   }
 
-  /** Synthetic decode-throughput fixture (Bench): `n` events rendered to
-    * wire transactions and decoded back through the FULL codec + cast
-    * path (encode + decode + Relation-typed cells), no I/O — the direct
-    * ingest-boundary comparable to the reference's published CDC ops/s.
-    */
-  def syntheticDecode(s: SparkSession, n: Long): DataFrame = {
-    import s.implicits._
-    val rel = sourceRelation
-    s.range(n).select(
-        col("id").as("event_id"),
-        (lit(1704067200000000L) + col("id") * 1000).as("ts_us"),
-        pmod(col("id"), lit(150)).as("user_id"),
-        element_at(array(lit("signup"), lit("error"), lit("purchase"),
-          lit("click"), lit("view")), (pmod(col("id"), lit(5)) + 1).cast("int"))
-          .as("event_type"),
-        (pmod(col("id") * 7919, lit(20000)) / 100.0).as("value"),
-        concat(lit("{\"k\": "), pmod(col("id"), lit(100)), lit("}")).as("props"))
-      .as[EvRow]
-      .map(r => decodeRow(r, rel))
-      .toDF()
-  }
-
   val queries: Map[String, Q] = Map(
     // S2 — binary pgoutput frames → decoded, type-cast envelope
     "q37_pgoutput_decode" -> ((s, dir) => {

@@ -42,11 +42,6 @@ object Ann {
     * round-trip exactly (Row collect → createDataFrame, same schema).
     */
   private[graft] def localPin(df: DataFrame): DataFrame = {
-    // A/B toggle (graft.AbConf spark.graft.localpin on/off): "off" is the
-    // pre-r17 plan (localCheckpoint pin), so both arms interleave in one
-    // JVM and host-load noise cannot masquerade as a delta
-    if (df.sparkSession.conf.get("spark.graft.localpin", "on") == "off")
-      return df.localCheckpoint()
     import scala.jdk.CollectionConverters._
     df.sparkSession.createDataFrame(df.collect().toList.asJava, df.schema)
   }

@@ -56,18 +56,9 @@ object Quantize {
     * bit-equal to the interpreted `aggregate(zip_with(...))` fold (same
     * IEEE op order), minus the per-element boxing; the PQ hot path
     * (encode/refine/ADC) evaluates it corpus × m × k times.
-    * `spark.graft.vecsqdist=off` keeps the pre-r17 HOF plan for
-    * interleaved A/B (graft.AbConf).
     */
   private def sqDist(a: Column, b: Column): Column =
-    if (org.apache.spark.sql.SparkSession.getActiveSession
-        .exists(_.conf.get("spark.graft.veckernels", "on") == "off"))
-      aggregate(
-        zip_with(a, b, (x, y) =>
-          (x.cast("double") - y.cast("double")) *
-            (x.cast("double") - y.cast("double"))),
-        lit(0.0), (acc, v) => acc + v)
-    else graft.functions.VectorExpressions.vec_sqdist(a, b)
+    graft.functions.VectorExpressions.vec_sqdist(a, b)
 
   /** Deterministic Lloyd's refinement of PQ codebooks: `iters` rounds of
     * per-subspace squared-L2 argmin assignment + per-dimension subvector
@@ -266,21 +257,11 @@ object Quantize {
     */
   def residuals(corpus: DataFrame, vecCol: String,
       centroids: DataFrame): DataFrame = {
-    import graft.similarity.Ann.norm
-    // r17: the interpreted zip_with lambda re-evaluates the embedded
-    // norm() subtree PER ELEMENT (O(dims²) boxed flops per row); the
-    // FloatVecUnitDiff kernel computes both norms once per row —
-    // bit-equal (same fold order, same per-element IEEE ops).
-    // spark.graft.veckernels=off keeps the pre-r17 plan for A/B.
-    def unitDiff(x: Column, c: Column): Column =
-      if (corpus.sparkSession.conf.get("spark.graft.veckernels", "on") == "off")
-        zip_with(x, c, (xi, ci) => xi.cast("double") / norm(x) -
-          ci.cast("double") / norm(c))
-      else graft.functions.VectorExpressions.float_vec_unit_diff(x, c)
     corpus.join(coarseCells(corpus, vecCol, centroids), Seq("vec_id"))
       .join(broadcast(centroids), Seq("centroid_id"))
       .select(col("vec_id"), col("centroid_id"),
-        unitDiff(col(vecCol), col("cent_emb")).as("rvec"))
+        graft.functions.VectorExpressions
+          .float_vec_unit_diff(col(vecCol), col("cent_emb")).as("rvec"))
   }
 
   /** Residual-space PQ seeds: [[pqCodebooks]]'s medoid rule applied to
@@ -328,13 +309,8 @@ object Quantize {
       .withColumn("crank", row_number().over(w))
       .filter(col("crank") <= nprobe)
       .select(col("query_id"), col("centroid_id"),
-        (if (queries.sparkSession.conf
-            .get("spark.graft.veckernels", "on") == "off")
-          zip_with(col(vecCol), col("cent_emb"),
-            (x, c) => x.cast("double") / norm(col(vecCol)) -
-              c.cast("double") / norm(col("cent_emb")))
-        else graft.functions.VectorExpressions
-          .float_vec_unit_diff(col(vecCol), col("cent_emb"))).as("qrvec"))
+        graft.functions.VectorExpressions
+          .float_vec_unit_diff(col(vecCol), col("cent_emb")).as("qrvec"))
     val d = dims / m
     val sub = queries.sparkSession.range(m).select(col("id").cast("int").as("m"))
     val adc = probes.crossJoin(sub)

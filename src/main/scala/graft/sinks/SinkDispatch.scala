@@ -216,16 +216,9 @@ object SinkDispatch {
       metrics: graft.config.Metrics.Registry,
       health: graft.config.Health.Registry,
       consumerId: String, consumerName: String)(
-      implicit spark: SparkSession): Seq[Outcome] = {
-    if (sys.env.get("GRAFT_RTDBG_SPLIT").contains("1")) {
-      val d = deliver(pipeline, spec, env)
-      val tA = System.nanoTime()
-      d.queryExecution.executedPlan
-      println(f"[rtdbg-split] analyze+plan: ${(System.nanoTime() - tA) / 1e6}%.1f ms")
-    }
+      implicit spark: SparkSession): Seq[Outcome] =
     deliverObservedDs(deliver(pipeline, spec, env), metrics, health,
       consumerId, consumerName)
-  }
 
   /** [[deliverObserved]] over an ALREADY-CONSTRUCTED outcome Dataset —
     * the plan-reuse entry point: a caller dispatching the same (feed-
@@ -259,11 +252,7 @@ object SinkDispatch {
     val t0 = System.nanoTime()
     val outcomes = run()
     val elapsedUs = (System.nanoTime() - t0) / 1000.0
-    val tM = System.nanoTime()
     metrics.recordOutcomes(consumerId, consumerName, outcomes)
-    if (sys.env.contains("GRAFT_TAIL_TIMING"))
-      println(f"[tailtiming.collect] collect=${elapsedUs / 1000.0}%.1fms " +
-        f"recordOutcomes=${(System.nanoTime() - tM) / 1e6}%.1fms")
     if (outcomes.nonEmpty) {
       // ONE observation per delivery (the reference's per-message
       // observe_delivery_latency semantics): the batch wall time is

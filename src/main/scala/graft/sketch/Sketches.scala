@@ -49,24 +49,19 @@ object Sketches {
     */
   def hllDistinct(df: DataFrame, groupCol: String, valueCol: String)
       : DataFrame = {
-    // r17 NEGATIVE RESULT (examined, default stays the r16 plan): a
-    // shared `distinct()` feeding both halves (HLL register maxima are
-    // duplicate-invariant, so regs-over-distinct ≡ regs-over-stream; the
-    // audit becomes a map-side count over the same reused exchange) cuts
-    // the second tokenize+explode pass — but interleaved A/B measured it
-    // SLOWER: sf1 min 4.37→4.59, sf0.1 wash (1.17→1.18, med 1.69→1.93).
-    // Mechanism: the old plan's two passes are both MAP-SIDE-reduced
-    // before their exchanges (countDistinct's partial-distinct; the
-    // 64-register maxima), so the saved tokenize pass costs less than
-    // making regs read the (group, value) distinct exchange instead of
-    // folding registers straight off the scan. Kept behind
-    // spark.graft.hlldv=on for re-testing on wider corpora.
-    val useDv = df.sparkSession.conf
-      .get("spark.graft.hlldv", "off") == "on"
-    val dv = df.select(col(groupCol), col(valueCol)).distinct()
-    val src = if (useDv) dv else df
+    // r17 NEGATIVE RESULT (OPTIMIZATION_r17.md): a shared `distinct()`
+    // feeding both halves (HLL register maxima are duplicate-invariant,
+    // so regs-over-distinct ≡ regs-over-stream; the audit becomes a
+    // map-side count over the same reused exchange) cuts the second
+    // tokenize+explode pass — but interleaved A/B measured it SLOWER:
+    // sf1 min 4.37→4.59, sf0.1 wash (1.17→1.18, med 1.69→1.93).
+    // Mechanism: both passes here are MAP-SIDE-reduced before their
+    // exchanges (countDistinct's partial-distinct; the 64-register
+    // maxima), so the saved tokenize pass costs less than making regs
+    // read the (group, value) distinct exchange instead of folding
+    // registers straight off the scan.
     val h = Hashing.portableHash(col(valueCol))
-    val regs = src
+    val regs = df
       .select(col(groupCol),
         pmod(h, lit(HllM)).cast("int").as("bucket"),
         (h / lit(HllM)).cast("bigint").as("w"))
@@ -94,11 +89,8 @@ object Sketches {
           .when(col("raw") > lit(4294967296.0 / 30.0),
             lit(-4294967296.0) * log(lit(1.0) - col("raw") / lit(4294967296.0)))
           .otherwise(col("raw"))).cast("bigint"))
-    val exact =
-      if (useDv) dv.groupBy(col(groupCol))
-        .agg(count(lit(1)).cast("bigint").as("n_exact"))
-      else df.groupBy(col(groupCol))
-        .agg(countDistinct(col(valueCol)).cast("bigint").as("n_exact"))
+    val exact = df.groupBy(col(groupCol))
+      .agg(countDistinct(col(valueCol)).cast("bigint").as("n_exact"))
     est.join(exact, Seq(groupCol))
       .select(col(groupCol), col("n_filled"), col("v_empty"),
         col("est"), col("n_exact"))
@@ -245,17 +237,12 @@ object Sketches {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
     val gType = df.schema(groupCol).dataType
-    // r17: the bounded bottom-k AGGREGATE replaces the two-phase
-    // row_number window chain (see skPlan below) — and once no window
-    // orders by `v`, the value string itself is dead after hashing, so
-    // the cached relation narrows to (gs, h). `spark.graft.kmvagg=off`
-    // keeps the pre-r17 shape for interleaved A/B (graft.AbConf).
-    val useAgg = spark.conf.get("spark.graft.kmvagg", "on") != "off"
-    val byV0 = df.select(col(groupCol).as("g"), col(valueCol).as("v"))
+    // the value string is dead after hashing (the bottom-k aggregate
+    // below orders by h alone), so the cached relation is (gs, h)
+    val byV = df.select(col(groupCol).as("g"), col(valueCol).as("v"))
       .groupBy(col("v"))
       .agg(sort_array(collect_set(col("g"))).as("gs"))
-      .withColumn("h", Hashing.portableHash(col("v")))
-    val byV = (if (useAgg) byV0.select(col("gs"), col("h")) else byV0)
+      .select(col("gs"), Hashing.portableHash(col("v")).as("h"))
       .persist()
     val taggedRows =
       try {
@@ -265,44 +252,21 @@ object Sketches {
           s"kmvSetOps: >$maxGroups distinct groups in '$groupCol' — the " +
             s"group-pair space is quadratic; pass a low-cardinality label " +
             s"or raise maxGroups deliberately")
-        val exploded =
-          if (useAgg) byV.select(explode(col("gs")).as("g"), col("h"))
-          else byV.select(explode(col("gs")).as("g"), col("h"), col("v"))
-        // bottom-k per group. r17 shape (useAgg): a bounded imperative
-        // aggregate (BottomKLongs — O(k) max-heap per group per task,
-        // map-side partial) keeps at most k hashes per group per
-        // partition, so the shuffle carries ≤ |G|×k×partitions longs and
-        // the exploded stream is never sorted. Result-equal to the
-        // window chain below: the bottom-k MULTISET of h is uniquely
+        val exploded = byV.select(explode(col("gs")).as("g"), col("h"))
+        // bottom-k per group: a bounded imperative aggregate
+        // (BottomKLongs — O(k) max-heap per group per task, map-side
+        // partial) keeps at most k hashes per group per partition, so
+        // the shuffle carries ≤ |G|×k×partitions longs and the exploded
+        // stream is never sorted. The bottom-k MULTISET of h is uniquely
         // determined (boundary ties have equal h), and downstream only
         // consumes h. This was the td66 pressure cliff at sf1 — the
-        // pre-r17 windows sorted and shuffled the full exploded stream
-        // (~|distinct values| × avg group-set) twice.
-        //
-        // Pre-r17 shape (spark.graft.kmvagg=off), kept for A/B: TWO-PHASE
-        // row_number windows (ties on h broken by value): phase 1 each
-        // partition's local bottom-k, phase 2 ranks the surviving
-        // |partitions|×k rows per group.
-        val skPlan =
-          if (useAgg)
-            exploded.groupBy(col("g"))
-              .agg(graft.functions.VectorExpressions
-                .bottom_k_longs(col("h"), k).as("hs"))
-              .select(col("g"), explode(col("hs")).as("h"))
-          else {
-            val wLocal = Window.partitionBy(col("g"), col("p"))
-              .orderBy(col("h").asc, col("v").asc)
-            val partial = exploded
-              .withColumn("p", spark_partition_id() % 32)
-              .withColumn("rn", row_number().over(wLocal))
-              .where(col("rn") <= k)
-              .select(col("g"), col("h"), col("v"))
-            val wG = Window.partitionBy(col("g"))
-              .orderBy(col("h").asc, col("v").asc)
-            partial.withColumn("rn", row_number().over(wG))
-              .where(col("rn") <= k)
-              .select(col("g"), col("h"))
-          }
+        // pre-r17 two-phase row_number windows sorted and shuffled the
+        // full exploded stream (~|distinct values| × avg group-set)
+        // twice (OPTIMIZATION_r17.md).
+        val skPlan = exploded.groupBy(col("g"))
+          .agg(graft.functions.VectorExpressions
+            .bottom_k_longs(col("h"), k).as("hs"))
+          .select(col("g"), explode(col("hs")).as("h"))
         val nullG = lit(null).cast(gType)
         val nullN = lit(null).cast("bigint")
         // tag layout: (tag, g1, g2, h, n) — 0 = sketch row, 1 = exact

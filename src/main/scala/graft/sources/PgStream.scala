@@ -81,12 +81,12 @@ object PgStream {
     * one group per replication slot, single digits in any deployment —
     * so a session default of 32+ shuffle partitions means 31+ EMPTY
     * state stores whose per-micro-batch delta commits are pure fixed
-    * overhead. Measured on the assembled runtime ([[graft.RuntimeBench]],
-    * local[32]): dropping the streaming query to 8 cut single-event
-    * delivered p50 845 ms → 464 ms and lifted ungrouped delivered
-    * throughput 63k → 73k ev/s; 8 also keeps the micro-batch
-    * dedup/dispatch shuffle wide enough for parallel transport
-    * connections (1 measurably starves dispatch). Conf is session-local:
+    * overhead. Measured on the assembled runtime (the path `perfbench/`'s
+    * `cdc_drain` and `cdc_paced` workloads drive, local[32]): dropping
+    * the streaming query to 8 cut single-event delivered p50 845 ms →
+    * 464 ms and lifted ungrouped delivered throughput 63k → 73k ev/s; 8
+    * also keeps the micro-batch dedup/dispatch shuffle wide enough for
+    * parallel transport connections (1 measurably starves dispatch). Conf is session-local:
     * batch analytics on the parent session keep their own width.
     */
   def streamingSession(spark: SparkSession,

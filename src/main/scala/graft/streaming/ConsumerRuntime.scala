@@ -64,10 +64,11 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * (`maxSegmentsPerBatch` / `maxOffsetsPerTrigger` — the contract every
   * structured-streaming sink shares); the ledger is ≤ max_ack_pending
   * entries by construction. Measured end to end (WAL segments → decode →
-  * pipeline → live loopback transport, [[graft.RuntimeBench]], with the
-  * streaming query on a [[graft.sources.PgStream.streamingSession]]
-  * clone): 71k delivered events/s grouped, 75k ungrouped at 500k-event
-  * batches — past the reference's published 50k ops/s single-node peak.
+  * pipeline → live loopback transport, the path `perfbench/`'s
+  * `cdc_drain` and `cdc_paced` workloads drive, with the streaming query
+  * on a [[graft.sources.PgStream.streamingSession]] clone): 71k
+  * delivered events/s grouped, 75k ungrouped at 500k-event batches —
+  * past the reference's published 50k ops/s single-node peak.
   */
 object ConsumerRuntime {
 
@@ -269,18 +270,6 @@ object ConsumerRuntime {
     // prior consumer under the same id would mislead the exact debugging
     // view the ring exists for
     Trace.clear(consumerId)
-    private val trace = sys.props.get("graft.runtime.trace").contains("1") ||
-      sys.env.get("GRAFT_RUNTIME_TRACE").contains("1")
-    private def traced[A](what: String)(f: => A): A = {
-      if (!trace) f
-      else {
-        val t0 = System.nanoTime()
-        val r = f
-        println(f"[runtime-trace] $consumerId $what: " +
-          f"${(System.nanoTime() - t0) / 1e6}%.1f ms")
-        r
-      }
-    }
 
     // RETRY ladder: one delivery WAVE per Spark job — the ledger hands
     // out at most one message per group (maxInflight), strict FIFO, so
@@ -288,23 +277,22 @@ object ConsumerRuntime {
     // Waves re-encode through a driver-local scan; that is fine here
     // because only FAILED deliveries enter the ledger (waves are small).
     private def dispatchWaves(): Unit = {
-      var wave = traced("drain")(ledger.drainDeliverable())
+      var wave = ledger.drainDeliverable()
       while (wave.nonEmpty) {
         val pipeline = CdcPipeline.build(
           spark.createDataset(wave.map(_.event)).toDF(), cfg, enrichment)
-        val outcomes = traced(s"deliver wave=${wave.size}")(
-          SinkDispatch.deliverObserved(pipeline, sink, env, metrics, health,
-            consumerId, cfg.name))
+        val outcomes = SinkDispatch.deliverObserved(pipeline, sink, env,
+          metrics, health, consumerId, cfg.name)
         val ok = outcomes.filter(_.ok).map(_.ack_id)
         val bad = outcomes.filterNot(_.ok).map(_.ack_id)
-        if (ok.nonEmpty) traced(s"ack ${ok.size}")(ledger.ack(ok))
-        if (bad.nonEmpty) traced(s"nack ${bad.size}")(ledger.nack(bad))
+        if (ok.nonEmpty) ledger.ack(ok)
+        if (bad.nonEmpty) ledger.nack(bad)
         Trace.info(consumerId, "retry wave",
           "size" -> wave.size.toString, "acked" -> ok.size.toString,
           "nacked" -> bad.size.toString)
         health.putEvent("sink_consumer", consumerId,
           "messages_pending_delivery", "success")
-        wave = traced("drain")(ledger.drainDeliverable())
+        wave = ledger.drainDeliverable()
       }
     }
 
@@ -317,8 +305,7 @@ object ConsumerRuntime {
         // initialDeliverCount = 1: everything entering the ladder already
         // burned one attempt in the batch dispatch, so max_retry stays
         // the max TOTAL attempts (AckDelivery's contract)
-        val n = traced(s"ingest ${rest.size}")(
-          ledger.ingest(rest, initialDeliverCount = 1))
+        val n = ledger.ingest(rest, initialDeliverCount = 1)
         rest = rest.drop(n)
         dispatchWaves()
         spin += 1
@@ -642,50 +629,43 @@ object ConsumerRuntime {
         SinkDispatch.deliver(pipeline, sink, env)
       }
       val dlqBefore = ledger.deadLetters().size
-      val tAct0 = System.nanoTime()
-      val outcomes = traced("deliver batch") {
-        // counted batches ride the RDD path: the DAG (incl. compiled
-        // codegen stages) is pinned once, each action pays only the
-        // scheduler floor. Observed batches stay on the Dataset path —
-        // RDD actions emit no SQL execution events, so the Observation
-        // would never land there.
-        cachedRdd match {
-          case Some(rdd) =>
-            SinkDispatch.deliverObservedRdd(rdd, metrics, health,
-              consumerId, cfg.name)
-          case None if knownN.isDefined =>
-            val ds = buildDs
-            val rdd = ds.rdd
-            // pin ONLY shuffle-free plans: re-running a pinned RDD whose
-            // lineage holds a ShuffleExchange SKIPS the completed map
-            // stage (Spark reuses registered shuffle outputs), so the
-            // reduce side would redeliver the FIRST batch's rows forever
-            // instead of re-reading the feed file. The single-event fast
-            // path (coalesce(1) + in-partition sort; the 1-partition
-            // dedup satisfies its distribution without an Exchange) is
-            // narrow end-to-end and re-executes from the source each
-            // action; the wide grouped path (repartition on group) is
-            // not — it rebuilds per batch and pays the ~120 ms analysis
-            // only where execution itself dominates anyway.
-            val shuffleFree = ds.queryExecution.executedPlan.collectFirst {
-              case e: org.apache.spark.sql.execution.exchange
-                .ShuffleExchangeLike => e
-            }.isEmpty
-            if (!shuffleFree)
-              lastUnpinnablePlan = Some(ds.queryExecution.executedPlan.toString)
-            dispatchCache =
-              if (shuffleFree) Some((deduped, smallPath, rdd)) else None
-            SinkDispatch.deliverObservedRdd(rdd, metrics, health,
-              consumerId, cfg.name)
-          case None =>
-            SinkDispatch.deliverObservedDs(buildDs, metrics, health,
-              consumerId, cfg.name)
-        }
+      // counted batches ride the RDD path: the DAG (incl. compiled
+      // codegen stages) is pinned once, each action pays only the
+      // scheduler floor. Observed batches stay on the Dataset path —
+      // RDD actions emit no SQL execution events, so the Observation
+      // would never land there.
+      val outcomes = cachedRdd match {
+        case Some(rdd) =>
+          SinkDispatch.deliverObservedRdd(rdd, metrics, health,
+            consumerId, cfg.name)
+        case None if knownN.isDefined =>
+          val ds = buildDs
+          val rdd = ds.rdd
+          // pin ONLY shuffle-free plans: re-running a pinned RDD whose
+          // lineage holds a ShuffleExchange SKIPS the completed map
+          // stage (Spark reuses registered shuffle outputs), so the
+          // reduce side would redeliver the FIRST batch's rows forever
+          // instead of re-reading the feed file. The single-event fast
+          // path (coalesce(1) + in-partition sort; the 1-partition
+          // dedup satisfies its distribution without an Exchange) is
+          // narrow end-to-end and re-executes from the source each
+          // action; the wide grouped path (repartition on group) is
+          // not — it rebuilds per batch and pays the ~120 ms analysis
+          // only where execution itself dominates anyway.
+          val shuffleFree = ds.queryExecution.executedPlan.collectFirst {
+            case e: org.apache.spark.sql.execution.exchange
+              .ShuffleExchangeLike => e
+          }.isEmpty
+          if (!shuffleFree)
+            lastUnpinnablePlan = Some(ds.queryExecution.executedPlan.toString)
+          dispatchCache =
+            if (shuffleFree) Some((deduped, smallPath, rdd)) else None
+          SinkDispatch.deliverObservedRdd(rdd, metrics, health,
+            consumerId, cfg.name)
+        case None =>
+          SinkDispatch.deliverObservedDs(buildDs, metrics, health,
+            consumerId, cfg.name)
       }
-      if (sys.env.contains("GRAFT_TAIL_TIMING"))
-        println(f"[tailtiming.act] rows=${outcomes.size} " +
-          f"action=${(System.nanoTime() - tAct0) / 1e6}%.1fms " +
-          f"cached=${cachedRdd.isDefined}")
       val nIn: Long = knownN.getOrElse(obsOpt.map(observedN).getOrElse(-1L))
       // on a metrics-bus miss KEEP the previous size (substituting
       // the POST-FILTER outcome count would flip a selective-filter
@@ -792,8 +772,7 @@ object ConsumerRuntime {
               val chunk = spark.read.parquet(f.toString)
                 .as[ChangeEvent].collect().toSeq
                 .sortBy(e => (e.commit_lsn, e.commit_idx))
-              if (chunk.nonEmpty) traced(s"spool chunk ${chunk.size}")(
-                ledgerLoop(chunk))
+              if (chunk.nonEmpty) ledgerLoop(chunk)
             }
           } finally { fs.delete(spoolPath, true); () }
         }
@@ -1083,8 +1062,7 @@ object ConsumerRuntime {
       val s = spark0.newSession()
       s.conf.set("spark.sql.shuffle.partitions", "1")
       s.conf.set("spark.sql.adaptive.enabled", "false")
-      s.conf.set("spark.sql.codegen.wholeStage",
-        sys.env.getOrElse("GRAFT_TAIL_CODEGEN", "true"))
+      s.conf.set("spark.sql.codegen.wholeStage", "true")
       s
     }
     import spark.implicits._
@@ -1177,7 +1155,7 @@ object ConsumerRuntime {
     // snapshot travels WITH its segment because stage A's decoder has
     // already advanced past it.
     final case class PreparedSeg(idx: Long, bytes: Array[Byte], n: Long,
-      snapshot: Array[Byte], decodeMs: Double, segs: Long = 1L)
+      snapshot: Array[Byte], segs: Long = 1L)
     val handoff = new java.util.concurrent.ArrayBlockingQueue[PreparedSeg](1)
     def fail(e: Throwable): Unit = if (!state.stopped) {
       state.stopped = true
@@ -1213,7 +1191,6 @@ object ConsumerRuntime {
         // cross-segment identity suppression for sharded plans (whose
         // feed skips dropDuplicates): one set per pending merge
         val accSeen = scala.collection.mutable.HashSet.empty[(Long, Long)]
-        var accMs = 0.0
         var accLast = -1L
         var accSegs = 0L
         def flush(blocking: Boolean): Unit =
@@ -1222,7 +1199,7 @@ object ConsumerRuntime {
             val prepared = PreparedSeg(accLast,
               if (accRows.nonEmpty) encodeTailFeed(accRows.toSeq)
               else null,
-              accRows.size.toLong, decoder.snapshot(), accMs, accSegs)
+              accRows.size.toLong, decoder.snapshot(), accSegs)
             // only this thread offers, so a positive capacity check
             // makes the non-blocking offer infallible; the blocking arm
             // polls so a stop() while stage B drains can never wedge it
@@ -1237,7 +1214,7 @@ object ConsumerRuntime {
               }
             if (handed) {
               accRows.clear(); accSeen.clear()
-              accMs = 0.0; accLast = -1L; accSegs = 0L
+              accLast = -1L; accSegs = 0L
             }
           }
         while (!state.stopped) {
@@ -1272,7 +1249,6 @@ object ConsumerRuntime {
           } else {
             run.foreach { case (idx, file) =>
               if (!state.stopped) {
-                val t0 = System.nanoTime()
                 val decodedRaw =
                   decoder.feedAll(graft.sources.WalSpool.readSegment(file))
                 // sharded plans carry no dropDuplicates (it would plan an
@@ -1284,7 +1260,6 @@ object ConsumerRuntime {
                   else decodedRaw.filter(d =>
                     accSeen.add((d.commit_lsn, d.commit_idx)))
                 accRows ++= decoded
-                accMs += (System.nanoTime() - t0) / 1e6
                 accLast = idx
                 accSegs += 1L
                 nextIdx = idx + 1
@@ -1304,21 +1279,11 @@ object ConsumerRuntime {
           val prepared = handoff.poll(50L,
             java.util.concurrent.TimeUnit.MILLISECONDS)
           if (prepared != null) {
-            val t1 = System.nanoTime()
             if (prepared.n > 0) {
               writeTailFeedBytes(feedPathStr, prepared.bytes)
-              val t2 = System.nanoTime()
               lane.deliverBatch(fixedBatch, knownN = Some(prepared.n))
               state.planPinned = lane.dispatchCachePinned
               state.planNote = lane.lastUnpinnablePlan
-              if (sys.env.contains("GRAFT_TAIL_TIMING")) {
-                val t3 = System.nanoTime()
-                println(f"[tailtiming] seg=${prepared.idx} " +
-                  f"rows=${prepared.n} " +
-                  f"decode=${prepared.decodeMs}%.1fms " +
-                  f"feed=${(t2 - t1) / 1e6}%.1fms " +
-                  f"deliver=${(t3 - t2) / 1e6}%.1fms")
-              }
             }
             // order matters: deliveries resolved → decoder state →
             // offset. A crash between deliver and the state write

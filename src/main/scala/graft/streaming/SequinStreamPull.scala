@@ -81,9 +81,6 @@ final class SequinStreamPull(
     .writeStream.outputMode("append")
     .foreachBatch { (batch: Dataset[Delivery], batchId: Long) =>
       val rows = batch.collect() // ONLY this micro-batch's new deliveries
-      if (sys.env.get("GRAFT_RUNTIME_TRACE").contains("1"))
-        println(s"[ledger-trace] batch=$batchId rows=${rows.length} " +
-          s"maxSeen=$maxSeenBatchId")
       SequinStreamPull.this.synchronized {
         totalDrainedRows += rows.length
         if (batchId > maxSeenBatchId) {

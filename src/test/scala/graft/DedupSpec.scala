@@ -4,6 +4,7 @@ import graft.dedup.Dedup
 import graft.functions.{Hashing, VectorExpressions}
 import graft.similarity.Ann
 import graft.text.TextAnalysis
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import scala.util.Random
 
@@ -51,22 +52,55 @@ class DedupSpec extends SparkSpec {
     assert(kept.size <= planted.count() - 2)
   }
 
-  test("FloatVecDot equals the declarative zip_with/aggregate fold bit-for-bit") {
-    import spark.implicits._
-    val rnd = new Random(42)
-    val cases = Seq.fill(10)((
-      Seq.fill(16)(rnd.nextFloat() * 20 - 10),
-      Seq.fill(16)(rnd.nextFloat() * 20 - 10)))
-    cases.foreach { case (a, b) =>
-      val df = Seq((a, b)).toDF("a", "b")
-      val native = df.select(VectorExpressions.float_vec_dot(col("a"), col("b")))
-        .collect().head.getDouble(0)
-      val hof = df.select(
-        aggregate(zip_with(col("a"), col("b"),
-          (x, y) => x.cast("double") * y.cast("double")),
-          lit(0.0), (acc, v) => acc + v)).collect().head.getDouble(0)
-      assert(java.lang.Double.doubleToLongBits(native) ==
-        java.lang.Double.doubleToLongBits(hof))
+  // The vector kernels against the declarative HOF forms they replaced
+  // (the pre-r17 PQ plans were built from exactly these folds). Equal-
+  // length inputs only — the kernels' documented contract.
+  private def hofSum(a: Column, b: Column)(f: (Column, Column) => Column) =
+    aggregate(zip_with(a, b, f), lit(0.0), (acc, v) => acc + v)
+  private def hofDot(a: Column, b: Column): Column =
+    hofSum(a, b)((x, y) => x.cast("double") * y.cast("double"))
+  private def hofNorm(v: Column): Column = sqrt(hofDot(v, v))
+  private val vectorKernels
+      : Seq[(String, String, Boolean, (Column, Column) => Column,
+        (Column, Column) => Column)] = Seq(
+    // (kernel, declarative form, double right side, kernel, HOF)
+    ("FloatVecDot", "zip_with/aggregate fold", false,
+      VectorExpressions.float_vec_dot, hofDot),
+    ("VecSqDist (float x float)", "zip_with/aggregate fold", false,
+      VectorExpressions.vec_sqdist, (a, b) => hofSum(a, b)((x, y) =>
+        (x.cast("double") - y.cast("double")) *
+          (x.cast("double") - y.cast("double")))),
+    ("VecSqDist (float x double)", "zip_with/aggregate fold", true,
+      VectorExpressions.vec_sqdist, (a, b) => hofSum(a, b)((x, y) =>
+        (x.cast("double") - y.cast("double")) *
+          (x.cast("double") - y.cast("double")))),
+    ("FloatVecUnitDiff", "zip_with unit-vector difference", false,
+      VectorExpressions.float_vec_unit_diff, (a, b) =>
+        zip_with(a, b, (x, y) =>
+          x.cast("double") / hofNorm(a) - y.cast("double") / hofNorm(b))))
+
+  vectorKernels.foreach { case (kernel, form, doubleRight, native, hof) =>
+    test(s"$kernel equals the declarative $form bit-for-bit") {
+      import spark.implicits._
+      val rnd = new Random(42)
+      val bits: Any => Seq[Long] = {
+        case d: Double => Seq(java.lang.Double.doubleToLongBits(d))
+        case s: scala.collection.Seq[_] =>
+          s.map(v => java.lang.Double.doubleToLongBits(v.asInstanceOf[Double])).toSeq
+      }
+      Seq.fill(10)(Seq.fill(16)(rnd.nextFloat() * 20 - 10)).foreach { a =>
+        val b = Seq.fill(16)(rnd.nextFloat() * 20 - 10)
+        val df =
+          if (doubleRight) Seq((a, b.map(_.toDouble * 1.000001))).toDF("a", "b")
+          else Seq((a, b)).toDF("a", "b")
+        // the local relation evaluates interpreted; the repartitioned one
+        // runs the projection through whole-stage codegen
+        Seq(df, df.repartition(1)).foreach { in =>
+          val row = in.select(native(col("a"), col("b")),
+            hof(col("a"), col("b"))).collect().head
+          assert(bits(row.get(0)) == bits(row.get(1)), s"a=$a b=$b")
+        }
+      }
     }
   }
 

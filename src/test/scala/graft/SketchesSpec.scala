@@ -217,6 +217,28 @@ class SketchesSpec extends SparkSpec {
     assert(r.isNullAt(r.fieldIndex("exact_jaccard_micro")))
   }
 
+  test("bottom_k_longs equals sorted.take(k), with duplicate hashes and k > n") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(7)
+    // group "dup" draws from 40 values so hashes repeat across rows and
+    // partitions; group "tiny" has fewer rows than any k below
+    val rows = Seq.fill(2000)(("wide", rnd.nextLong())) ++
+      Seq.fill(500)(("dup", rnd.nextInt(40).toLong - 20L)) ++
+      Seq(("tiny", 5L), ("tiny", -3L), ("tiny", 5L)) ++
+      Seq(("edge", Long.MaxValue), ("edge", Long.MinValue), ("edge", 0L))
+    // 8 partitions: map-side partial buffers merge (and serialize)
+    val df = rows.toDF("g", "h").repartition(8)
+    Seq(1, 3, 64, 5000).foreach { k =>
+      val got = df.groupBy("g")
+        .agg(graft.functions.VectorExpressions.bottom_k_longs(col("h"), k)
+          .as("hs"))
+        .as[(String, Seq[Long])].collect().toMap
+      val want = rows.groupBy(_._1).map { case (g, rs) =>
+        g -> rs.map(_._2).sorted.take(k) }
+      assert(got == want, s"k=$k")
+    }
+  }
+
   test("kmvSetOps: refuses high-cardinality group columns (quadratic guard)") {
     import spark.implicits._
     val manyGroups = (1 to 50).flatMap(g => (1 to 3).map(i => (s"g$g", s"v$i")))

@@ -2,7 +2,7 @@
 # Run a graft main class with plain `java` against the sbt-compiled
 # classes — no sbt process, so long probes never contend with builds on
 # the project lock. Compile first (sbt -batch compile), then:
-#   tools/run_probe.sh [-Xmx8g ...] graft.TimeQueries reps=1 td104_containment
+#   tools/run_probe.sh [-Xmx8g ...] graft.Explain td104_containment
 # Env (SPARK_GRAFT_*) passes through unchanged.
 set -e
 cd "$(dirname "$0")/.."
