@@ -1,19 +1,24 @@
 package graft.sinks
 
 import graft.ops.Ordering
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, Path => HPath}
+import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation, InMemoryFileIndex}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, IntegerType, StructType}
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.util.Try
 
 /** Change-retention sink: idempotent upsert of CDC batches into an event
   * table — the reference's WAL-pipeline destination
-  * (`/root/reference/lib/sequin/runtime/wal_pipeline_server.ex:336-445`:
+  * (`lib/sequin/runtime/wal_pipeline_server.ex:336-445`:
   * `INSERT ... ON CONFLICT (seq, record_pk) DO UPDATE` — per-row conflict
   * resolution touches only the conflicting rows, never the whole table).
   * For high volume the reference time-partitions the event table with
   * pg_partman so retention DROPs whole partitions instead of DELETE-ing
-  * rows (`/root/reference/docs/reference/change-retention.mdx:112-137`).
+  * rows (`docs/reference/change-retention.mdx:112-137`).
   *
   * Spark rendition — a TWO-dimensional layout `bucket=B/epoch=E`:
   *   - `bucket` = hash(record_pk) % numBuckets: bounds the blast radius of
@@ -27,14 +32,30 @@ import scala.util.Try
   *     to in-window epoch dirs via partition filters.
   *
   * An upsert MERGEs last-writer-wins (version = `(commit_lsn,
-  * commit_idx)`) and rewrites ONLY the affected `(bucket, epoch)` dirs:
-  * the epochs the batch's rows land in, plus the epochs holding the
-  * superseded prior versions of the batch's pks (found by a thin
-  * pk-column scan of the touched buckets). I/O per micro-batch is
-  * O(batch + affected-epoch bytes) — at 100 TB retained, inserting new
-  * rows touches one epoch dir per bucket, never the table's history.
-  * With Delta/Iceberg this becomes a genuine `MERGE INTO` with file-level
-  * pruning, same plan shape.
+  * commit_idx)`, NULL lowest) in four Spark jobs, deciding on the driver:
+  *   1. the batch is persisted once and its `(pk, version, bucket, epoch,
+  *      row id)` keys are collected;
+  *   2. one filtered scan of the touched buckets (`record_pk IN batch
+  *      pks`, pk and version columns only) collects the stored versions;
+  *   3. per pk, the batch's latest version wins only if it beats the
+  *      stored one — a tie or an older row loses, so a full replay
+  *      rewrites nothing and runs no further job;
+  *   4. one merge — the affected dirs (the winners' dirs plus the dirs of
+  *      the stored versions they supersede) minus the superseded pks,
+  *      union the winning rows — is written to a staging dir and swapped
+  *      in per `(bucket, epoch)`.
+  * Inserting new rows touches one epoch dir per bucket, never the table's
+  * history. Known scaling defect: step 2 still reads the pk column of
+  * EVERY file in the touched buckets, so the probe grows with retained
+  * history (O(history), not O(batch)); a per-dir key sidecar would bound
+  * it. With Delta/Iceberg this becomes a genuine `MERGE INTO` with
+  * file-level pruning, same plan shape.
+  *
+  * Schema: the table's data schema is recorded in `_schema` at the root
+  * (temp file + atomic rename), widened by an upsert BEFORE its swap, and
+  * every scan reads with it instead of a `mergeSchema` footer pass —
+  * files older than an upstream schema change read back NULL-padded. A
+  * table written before `_schema` existed is inferred once and recorded.
   *
   * Crash safety: staged writes to a dot-prefixed temp dir (invisible to
   * Spark's file index), per-(bucket,epoch) two-rename swaps with `.old-`
@@ -42,7 +63,8 @@ import scala.util.Try
   * runs before every read/upsert and rolls a half-swapped dir back (or
   * finishes a half-finished drop), so a crashed batch never loses the
   * table and replaying the batch is idempotent — W6's exactly-once
-  * contract without a transactional store.
+  * contract without a transactional store. A crash after the widening
+  * but before the swap leaves extra all-NULL columns, never hidden data.
   *
   * `numBuckets` and `epochWidth` are per-table layout constants chosen at
   * creation and must never change for an existing table (like the
@@ -144,14 +166,110 @@ object EventTableSink {
             s"$cur at $path")
     }
 
-  /** Read the table (internal layout columns dropped). `mergeSchema`
-    * because dirs untouched since an upstream schema change still hold
-    * the narrower files — the union schema is the table's schema.
+  /** Read the table (internal layout columns dropped) under its recorded
+    * `_schema` (see [[tableSchema]]): dirs untouched since an upstream
+    * schema change still hold the narrower files and read back
+    * NULL-padded, with no footer pass over the files.
     */
   def read(spark: SparkSession, path: String): DataFrame = {
     repair(path)
-    spark.read.option("mergeSchema", "true").parquet(path)
-      .drop(BucketCol, EpochCol)
+    scanTable(spark, path, Seq(path)).drop(BucketCol, EpochCol)
+  }
+
+  private def schemaFile(path: String): Path = Paths.get(path).resolve("_schema")
+
+  /** The table's data schema (layout columns excluded): the union of
+    * every schema its upserts have written, recorded in `_schema` at the
+    * table root. A table written before `_schema` existed is inferred
+    * once with a `mergeSchema` footer pass and the result recorded (an
+    * unreadable file fails it, as it fails any read). None for a table
+    * with no data dirs yet.
+    */
+  def tableSchema(spark: SparkSession, path: String): Option[StructType] = {
+    val f = schemaFile(path)
+    if (Files.exists(f))
+      Some(DataType.fromJson(Files.readString(f)).asInstanceOf[StructType])
+    else if (!Files.exists(Paths.get(path)) || bucketDirs(Paths.get(path)).isEmpty) None
+    else {
+      val data = dataSchema(
+        spark.read.option("mergeSchema", "true").parquet(path).schema)
+      recordSchema(path, data, replace = false)
+      Some(data)
+    }
+  }
+
+  /** The data columns of a scan or merge frame as `_schema` holds them:
+    * layout columns dropped, every column nullable (as parquet reads it).
+    */
+  private def dataSchema(s: StructType): StructType =
+    StructType(s.fields.filterNot(f => f.name == BucketCol || f.name == EpochCol)
+      .map(_.copy(nullable = true)))
+
+  /** Write `_schema`: a temp file, then an atomic rename over the old one
+    * (`replace`, the upsert's widening), or a hard link that fails if one
+    * exists already — recording an inferred schema never overwrites a
+    * writer's wider one.
+    */
+  private def recordSchema(path: String, schema: StructType,
+      replace: Boolean): Unit = {
+    val root = Paths.get(path)
+    Files.createDirectories(root)
+    val tmp = root.resolve(s".schema-${System.nanoTime()}")
+    Files.writeString(tmp, schema.json)
+    if (replace)
+      Files.move(tmp, schemaFile(path), StandardCopyOption.ATOMIC_MOVE,
+        StandardCopyOption.REPLACE_EXISTING)
+    else { Try(Files.createLink(schemaFile(path), tmp)); Files.delete(tmp) }
+  }
+
+  /** The parquet files under `dirs` (the table root, or dirs inside it)
+    * read with the data schema `data` and the layout columns typed as
+    * partition columns — a table whose dirs were all dropped reads as an
+    * empty frame. This is the relation `spark.read.schema(..).parquet(..)`
+    * builds, but listed by [[DriverListing]].
+    */
+  private def scan(spark: SparkSession, path: String, data: StructType,
+      dirs: Seq[String]): DataFrame = {
+    val schema = data.add(BucketCol, IntegerType).add(EpochCol, IntegerType)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val roots = dirs.map { d => val p = new HPath(d); p.getFileSystem(conf).makeQualified(p) }
+    val index = new InMemoryFileIndex(spark, roots, Map("basePath" -> path),
+      Some(schema), new DriverListing(conf))
+    val parts = index.partitionSchema
+    spark.baseRelationToDataFrame(HadoopFsRelation(index, parts,
+      StructType(schema.filterNot(f => parts.fieldNames.contains(f.name))),
+      None, new ParquetFileFormat, Map.empty)(spark))
+  }
+
+  /** [[scan]] under the table schema; a table with no data falls back to
+    * inference and fails as a plain parquet read of `dirs` does.
+    */
+  private def scanTable(spark: SparkSession, path: String,
+      dirs: Seq[String]): DataFrame = tableSchema(spark, path) match {
+    case Some(data) => scan(spark, path, data, dirs)
+    case None => spark.read.option("mergeSchema", "true").parquet(dirs: _*)
+  }
+
+  /** The file index's listing, done serially on the driver: the index
+    * asks its status cache for every root before listing, and its own
+    * listing runs a Spark job for any dir with more than 32 children
+    * (`spark.sql.sources.parallelPartitionDiscovery.threshold`). At 83
+    * epoch dirs per bucket that job took ~2 s, the serial listing
+    * ~0.13 s. Hidden `_`/`.` names are skipped, as Spark's listing does.
+    */
+  private final class DriverListing(conf: Configuration) extends FileStatusCache {
+    override def getLeafFiles(path: HPath): Option[Array[FileStatus]] = {
+      val fs = path.getFileSystem(conf)
+      def leaves(s: FileStatus): Seq[FileStatus] =
+        if (!s.isDirectory) Seq(s)
+        else fs.listStatus(s.getPath).toSeq.filterNot { c =>
+          val n = c.getPath.getName
+          n.startsWith("_") || n.startsWith(".")
+        }.flatMap(leaves)
+      Some(leaves(fs.getFileStatus(path)).toArray)
+    }
+    override def putLeafFiles(path: HPath, files: Array[FileStatus]): Unit = ()
+    override def invalidateAll(): Unit = ()
   }
 
   /** Point lookup: the read-side payoff of bucketing — the key's bucket
@@ -167,18 +285,19 @@ object EventTableSink {
       .select(bucketOf(col(keyCols.head), numBuckets)).head().getInt(0)
     val dir = bucketDir(path, b)
     if (!Files.exists(dir))
-      spark.read.option("mergeSchema", "true").parquet(path)
-        .drop(BucketCol, EpochCol).limit(0)
+      scanTable(spark, path, Seq(path)).drop(BucketCol, EpochCol).limit(0)
     else
-      spark.read.option("mergeSchema", "true").option("basePath", path)
-        .parquet(dir.toString)
-        .drop(BucketCol, EpochCol).filter(col(keyCols.head) === pk)
+      scanTable(spark, path, Seq(dir.toString)).drop(BucketCol, EpochCol)
+        .filter(col(keyCols.head) === pk)
   }
 
   /** Idempotently merge `batch` into the layout at `path`, rewriting only
-    * the affected `(bucket, epoch)` dirs: those receiving batch rows plus
-    * those holding superseded prior versions of the batch's pks. With a
-    * `writer` handle, the epoch is checked on entry and re-verified
+    * the affected `(bucket, epoch)` dirs: those receiving winning batch
+    * rows plus those holding the stored versions they supersede. Four
+    * Spark jobs: the batch's keys to the driver, one filtered key probe,
+    * and the merge write's shuffle and write (none when every batch row
+    * loses, e.g. a full replay). With a `writer` handle, the epoch is
+    * checked on entry and re-verified before the schema widening and
     * before each dir swap (see [[openWriter]] for the exact guarantee).
     */
   def upsert(spark: SparkSession, batch: DataFrame, path: String,
@@ -187,66 +306,112 @@ object EventTableSink {
       writer: Option[Writer] = None): Unit = {
     fenceCheck(path, writer)
     repair(path)
-    val target = Paths.get(path)
+    val pk = keyCols.head
     val keyed = batch
-      .withColumn(BucketCol, bucketOf(col(keyCols.head), numBuckets))
+      .withColumn(BucketCol, bucketOf(col(pk), numBuckets))
       .withColumn(EpochCol, epochOf(col(seqCols.head), epochWidth))
-      .localCheckpoint() // evaluate once: pair scan + merge both consume it
-    val batchPairs = keyed.select(BucketCol, EpochCol).distinct()
-      .collect().map(r => (r.getInt(0), r.getInt(1)))
-    if (batchPairs.isEmpty) return
+      .withColumn(RowId, monotonically_increasing_id())
+      .persist() // the key collect fills it, the merge write reads it
+    try {
+      // job 1: every batch row's key, version and target dir
+      val rows = keyed.select(versionCols :+ col(RowId): _*).collect()
+        .map(r => (stored(r), r.getLong(5)))
+      if (rows.isEmpty) return
+      val latest: Map[Any, (Stored, Long)] = rows.groupBy(_._1.pk).map {
+        case (k, vs) => k -> vs.maxBy(_._1.version)(VersionOrder)
+      }
+      // job 2: the stored versions of the batch's pks, one filtered scan
+      // of the pk column over the buckets the batch touches
+      val recorded = tableSchema(spark, path)
+      // dirs exist only once a schema is recorded or inferred
+      def scanDirs(dirs: Seq[String]): DataFrame =
+        scan(spark, path, recorded.get, dirs)
+      val touched = latest.values.map(_._1.bucket).toSeq.distinct.sorted
+        .map(bucketDir(path, _)).filter(Files.exists(_)).map(_.toString)
+      val prior: Map[Any, Seq[Stored]] =
+        if (touched.isEmpty) Map.empty
+        else scanDirs(touched)
+          .select(versionCols: _*).filter(keyIn(latest.keys.toSeq))
+          .collect().map(stored).toSeq.groupBy(_.pk)
+      // last-writer-wins on the driver: a stored version that ties or
+      // beats the batch's latest wins, so a full replay rewrites nothing
+      val winners = latest.values.filter { case (b, _) =>
+        prior.getOrElse(b.pk, Nil).forall(s => VersionOrder.lt(s.version, b.version))
+      }.toSeq
+      if (winners.isEmpty) return
+      val superseded = winners.flatMap { case (b, _) => prior.getOrElse(b.pk, Nil) }
+      val affected = (winners.map(_._1) ++ superseded)
+        .map(v => (v.bucket, v.epoch)).distinct.sorted
+      val winnerIds = winners.map(_._2).toSet
+      val losers = rows.collect { case (_, id) if !winnerIds(id) => id }
+      val fresh = (if (losers.isEmpty) keyed
+        else keyed.filter(!col(RowId).isin(losers.toSeq: _*))).drop(RowId)
 
-    val touchedBucketDirs = batchPairs.map(_._1).distinct
-      .map(b => bucketDir(path, b)).filter(Files.exists(_)).map(_.toString)
-    // thin pk-column scan of the touched buckets: which existing epochs
-    // hold a prior version of a batch pk (and must be rewritten without
-    // it)? Bounded collect: ≤ touched buckets × live epochs pairs. No
-    // mergeSchema: the scan reads only the key column, which every file
-    // has — skipping the union-schema footer pass over all files.
-    val supersededPairs: Array[(Int, Int)] =
-      if (touchedBucketDirs.isEmpty) Array.empty
-      else spark.read.option("basePath", path)
-        .parquet(touchedBucketDirs: _*)
-        .select((keyCols :+ BucketCol :+ EpochCol).map(col): _*)
-        .join(broadcast(keyed.select(keyCols.head).distinct()), keyCols)
-        .select(BucketCol, EpochCol).distinct()
-        .collect().map(r => (r.getInt(0), r.getInt(1)))
-    val affected = (batchPairs ++ supersededPairs).distinct.sorted
+      val affectedDirs = affected.map { case (b, e) => pairDir(path, b, e) }
+        .filter(Files.exists(_)).map(_.toString)
+      // the affected dirs minus the superseded pks, plus the winners. NO
+      // Try: if an affected dir cannot be read, the upsert must ABORT
+      // (nothing mutated yet) rather than swap in a merge without it.
+      // allowMissingColumns both ways: an upstream schema change (column
+      // added or dropped mid-stream, S2b relation change) widens the
+      // table with nulls instead of silently DROPPING the batch's columns.
+      val merged =
+        if (affectedDirs.isEmpty) fresh
+        else {
+          val kept = scanDirs(affectedDirs)
+          val supersededPks = superseded.map(_.pk).distinct
+          // NULL-safe: NOT IN is NULL for a NULL pk, which must stay
+          (if (supersededPks.isEmpty) kept
+            else kept.filter(coalesce(!keyIn(supersededPks), lit(true))))
+            .unionByName(fresh, allowMissingColumns = true)
+        }
+      val data = dataSchema(merged.schema)
+      val widened = recorded.fold(data) { r =>
+        StructType(r.fields.map(f => data.find(_.name == f.name).getOrElse(f)) ++
+          data.fields.filterNot(f => r.fieldNames.contains(f.name)))
+      }
 
-    val affectedDirs = affected.map { case (b, e) => pairDir(path, b, e) }
-      .filter(Files.exists(_)).map(_.toString)
-    // NO Try here: if an affected dir exists but cannot be read, the
-    // upsert must ABORT (nothing mutated yet) — swallowing the failure
-    // would merge without those rows and the swap would then drop the
-    // "emptied" live dirs, silently deleting data on an IO error
-    val existing: Option[DataFrame] =
-      if (affectedDirs.isEmpty) None
-      else Some(spark.read.option("mergeSchema", "true")
-        .option("basePath", path).parquet(affectedDirs: _*))
-
-    // allowMissingColumns both ways: an upstream schema change (column
-    // added or dropped mid-stream, S2b relation change) widens the table
-    // with nulls instead of silently DROPPING the batch's new columns
-    val unioned = existing match {
-      case Some(cur) => cur.unionByName(keyed, allowMissingColumns = true)
-      case None      => keyed
-    }
-    val merged = Ordering.dedupLatest(unioned, keyCols, seqCols.map(col))
-
-    val tmp = target.resolve(s".tmp-${System.nanoTime()}")
-    // cluster by (bucket, epoch) before the partitioned write: one task
-    // owns each affected dir, so it holds a few contiguous files, not
-    // (writer tasks × dirs) fragments — and the swap moves fewer files.
-    // Rows are additionally SORTED by key within each dir so parquet
-    // min/max column-chunk stats are tight: a point lookup prunes row
-    // groups INSIDE the dir, not just the dir itself.
-    merged.repartition(col(BucketCol), col(EpochCol))
-      .sortWithinPartitions(
-        Seq(col(BucketCol), col(EpochCol)) ++ keyCols.map(col): _*)
-      .write.partitionBy(BucketCol, EpochCol).mode(SaveMode.Overwrite)
-      .parquet(tmp.toString)
-    swapPairs(path, affected, tmp, writer)
+      val tmp = Paths.get(path).resolve(s".tmp-${System.nanoTime()}")
+      // cluster by (bucket, epoch) before the partitioned write: one task
+      // owns each affected dir, so it holds a few contiguous files, not
+      // (writer tasks × dirs) fragments — and the swap moves fewer files.
+      // Rows are additionally SORTED by key within each dir so parquet
+      // min/max column-chunk stats are tight: a point lookup prunes row
+      // groups INSIDE the dir, not just the dir itself.
+      merged.repartition(col(BucketCol), col(EpochCol))
+        .sortWithinPartitions(
+          Seq(col(BucketCol), col(EpochCol)) ++ keyCols.map(col): _*)
+        .write.partitionBy(BucketCol, EpochCol).mode(SaveMode.Overwrite)
+        .parquet(tmp.toString)
+      // widen BEFORE the swap: a crash in between leaves a schema wider
+      // than the files (extra all-NULL columns), never files a reader
+      // cannot see
+      if (!recorded.contains(widened)) {
+        try { fenceCheck(path, writer); recordSchema(path, widened, replace = true) }
+        catch { case e: Throwable => deleteRecursively(tmp); throw e }
+      }
+      swapPairs(path, affected, tmp, writer)
+    } finally keyed.unpersist()
   }
+
+  private val RowId = "_graft_row_id"
+
+  /** One row's key, version and `(bucket, epoch)` dir. */
+  private final case class Stored(pk: Any, version: (Option[Long], Option[Long]),
+      bucket: Int, epoch: Int)
+
+  /** `(commit_lsn, commit_idx)` with NULL lowest — dedupLatest's order. */
+  private val VersionOrder = scala.math.Ordering[(Option[Long], Option[Long])]
+
+  private val versionCols: Seq[Column] = Seq(col(keyCols.head),
+    col(seqCols.head).cast("long"), col(seqCols(1)).cast("long"),
+    col(BucketCol), col(EpochCol))
+
+  private def stored(r: Row): Stored = Stored(r.get(0),
+    (Option(r.get(1)).map(_.asInstanceOf[Long]), Option(r.get(2)).map(_.asInstanceOf[Long])),
+    r.getInt(3), r.getInt(4))
+
+  private def keyIn(pks: Seq[Any]): Column = col(keyCols.head).isin(pks: _*)
 
   /** Swap each affected pair's staged dir into place (or drop the live
     * dir when the merge emptied it), re-verifying the writer fence before
@@ -327,16 +492,9 @@ object EventTableSink {
     repair(path)
     val root = Paths.get(path)
     if (!Files.exists(root)) return 0
-    import scala.jdk.CollectionConverters._
-    def list(p: Path): Seq[Path] = {
-      val s = Files.list(p)
-      try s.iterator().asScala.toSeq finally s.close()
-    }
     // driver-side dir listing (bounded by live dir count): cold epochs
     // grouped to their floor boundary; only multi-dir groups move
-    val groups: Seq[(Int, Int, Seq[Int])] = list(root)
-      .filter(p => Files.isDirectory(p) &&
-        p.getFileName.toString.startsWith(s"$BucketCol="))
+    val groups: Seq[(Int, Int, Seq[Int])] = bucketDirs(root)
       .flatMap { bdir =>
         val b = bdir.getFileName.toString.stripPrefix(s"$BucketCol=").toInt
         val es = list(bdir).map(_.getFileName.toString)
@@ -355,8 +513,7 @@ object EventTableSink {
 
     val srcDirs = groups.flatMap { case (b, _, es) =>
       es.map(e => pairDir(path, b, e).toString) }
-    val combined = spark.read.option("mergeSchema", "true")
-      .option("basePath", path).parquet(srcDirs: _*)
+    val combined = scanTable(spark, path, srcDirs)
       .withColumn(EpochCol,
         (col(EpochCol) - pmod(col(EpochCol), lit(groupEpochs))).cast("int"))
     val tmp = root.resolve(s".tmp-${System.nanoTime()}")
@@ -422,15 +579,14 @@ object EventTableSink {
     repair(path)
     val target = Paths.get(path)
     if (!Files.exists(target)) return 0L
-    val t = Try(spark.read.option("mergeSchema", "true").parquet(path))
-      .getOrElse(return 0L)
+    val t = Try(scanTable(spark, path, Seq(path))).getOrElse(return 0L)
     // Expiry probe, pass 1 — find EXPIRED rows with the cutoff PUSHED
     // into the scan: parquet row-group ts stats skip fully-live epochs
     // wholesale (commit ts correlates with the lsn-derived epoch, so a
     // live epoch's min ts clears the cutoff), leaving data I/O ∝ expired
     // + boundary rows, not table rows. NULL ts rows never match
     // `< cutoff` (e.g. dirs written before tsCol existed, read back as
-    // NULL under mergeSchema): they keep their dir off the full-drop
+    // NULL under the table schema): they keep their dir off the full-drop
     // path and survive any boundary rewrite.
     val expiredByPair = t.filter(col(tsCol) < cutoff)
       .groupBy(col(BucketCol), col(EpochCol))
@@ -447,8 +603,7 @@ object EventTableSink {
       .filter(Files.exists(_)).map(_.toString)
     val totals =
       if (candDirs.isEmpty) Map.empty[(Int, Int), Long]
-      else spark.read.option("mergeSchema", "true")
-        .option("basePath", path).parquet(candDirs: _*)
+      else scanTable(spark, path, candDirs)
         .groupBy(col(BucketCol), col(EpochCol))
         .agg(count(lit(1)).as("total"))
         .collect()
@@ -477,8 +632,7 @@ object EventTableSink {
 
     if (boundary.nonEmpty) {
       val dirs = boundary.map { case (b, e) => pairDir(path, b, e).toString }
-      val keep = spark.read.option("mergeSchema", "true")
-        .option("basePath", path).parquet(dirs: _*)
+      val keep = scanTable(spark, path, dirs)
         .filter(col(tsCol) >= cutoff || col(tsCol).isNull)
       val tmp = target.resolve(s".tmp-${System.nanoTime()}")
       keep.repartition(col(BucketCol), col(EpochCol))
@@ -521,7 +675,7 @@ object EventTableSink {
     // (labels never exceed their rows' epochs). Uncompacted tables have
     // span = 1 — the original exact bound.
     val span = compactionSpan(path)
-    val t = spark.read.option("mergeSchema", "true").parquet(path)
+    val t = scanTable(spark, path, Seq(path))
       .filter(
         col(EpochCol) >= lit((fromLsn / epochWidth).toInt - (span - 1)) &&
         col(EpochCol) <= lit((toLsn / epochWidth).toInt))
@@ -581,7 +735,7 @@ object EventTableSink {
   def stateAsOf(spark: SparkSession, path: String, lsn: Long, idx: Long,
       epochWidth: Long): DataFrame = {
     repair(path)
-    val t = spark.read.option("mergeSchema", "true").parquet(path)
+    val t = scanTable(spark, path, Seq(path))
       .filter(col(EpochCol) <= lit((lsn / epochWidth).toInt))
       .drop(BucketCol, EpochCol)
     stateAsOf(t, lsn, idx)
@@ -616,20 +770,17 @@ object EventTableSink {
   private def dropEmptyBuckets(path: String): Unit = {
     val root = Paths.get(path)
     if (!Files.exists(root)) return
-    import scala.jdk.CollectionConverters._
-    val buckets = {
-      val s = Files.list(root)
-      try s.iterator().asScala.toSeq finally s.close()
-    }
-    buckets.filter(_.getFileName.toString.startsWith(s"$BucketCol="))
-      .foreach { b =>
-        val children = {
-          val s = Files.list(b)
-          try s.iterator().asScala.toSeq finally s.close()
-        }
-        if (children.isEmpty) Try(Files.delete(b))
-      }
+    bucketDirs(root).foreach(b => if (list(b).isEmpty) Try(Files.delete(b)))
   }
+
+  private def list(p: Path): Seq[Path] = {
+    import scala.jdk.CollectionConverters._
+    val s = Files.list(p)
+    try s.iterator().asScala.toSeq finally s.close()
+  }
+
+  private def bucketDirs(root: Path): Seq[Path] = list(root).filter(p =>
+    Files.isDirectory(p) && p.getFileName.toString.startsWith(s"$BucketCol="))
 
   /** Roll back any dir left half-swapped by a crash (live dir missing,
     * `.old-` backup present), finish any half-finished drop (`.del-`
@@ -639,11 +790,6 @@ object EventTableSink {
   def repair(path: String): Unit = {
     val root = Paths.get(path)
     if (!Files.exists(root)) return
-    import scala.jdk.CollectionConverters._
-    def list(p: Path): Seq[Path] = {
-      val s = Files.list(p)
-      try s.iterator().asScala.toSeq finally s.close()
-    }
     def heal(dir: Path, prefix: String): Unit =
       list(dir).foreach { p =>
         val name = p.getFileName.toString
@@ -659,9 +805,7 @@ object EventTableSink {
         else if (name.startsWith(".tmp-")) deleteRecursively(p)
       }
     heal(root, BucketCol) // legacy flat layout + root-level debris
-    list(root).filter { p =>
-      Files.isDirectory(p) && p.getFileName.toString.startsWith(s"$BucketCol=")
-    }.foreach(heal(_, EpochCol))
+    bucketDirs(root).foreach(heal(_, EpochCol))
     dropEmptyBuckets(path)
   }
 

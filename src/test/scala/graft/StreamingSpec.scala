@@ -563,6 +563,31 @@ class StreamingSpec extends SparkSpec {
     // and a replayed upsert after the crash still converges
     EventTableSink.upsert(spark, rows, dir, numBuckets = 4)
     assert(EventTableSink.read(spark, dir).count() == 50)
+
+    // crash state 4: an upsert that adds a column died after widening
+    // `_schema` but before its swap — the recorded schema is wider than
+    // every file and the staged dir is left behind
+    val widened = EventTableSink.tableSchema(spark, dir).get.add("added", "long")
+    Files.writeString(Paths.get(dir).resolve("_schema"), widened.json)
+    val staged = Paths.get(dir).resolve(".tmp-999/bucket=0/epoch=0")
+    Files.createDirectories(staged)
+    Files.writeString(staged.resolve("part-0.parquet"), "torn")
+    val afterCrash = EventTableSink.read(spark, dir)
+    assert(afterCrash.select("record_pk", "record_value").collect()
+      .map(r => (r.getString(0), r.getDouble(1))).sortBy(_._1).sameElements(expect))
+    assert(afterCrash.filter(col("added").isNotNull).count() == 0)
+    assert(!Files.exists(Paths.get(dir).resolve(".tmp-999")))
+    // replaying the crashed batch (newer versions of pks 1..5) converges
+    val wide = (1 to 5).map(i => ev(16, i.toLong, "7", i.toString,
+      value = 100.0 + i)).toDF().withColumn("added", lit(7L))
+    EventTableSink.upsert(spark, wide, dir, numBuckets = 4)
+    val converged = EventTableSink.read(spark, dir)
+    assert(converged.count() == 50)
+    assert(converged.filter(col("added") === 7L)
+      .select("record_pk", "record_value").collect()
+      .map(r => (r.getString(0), r.getDouble(1))).sortBy(_._1).toSeq ==
+      (1 to 5).map(i => (i.toString, 100.0 + i)).sortBy(_._1))
+    assert(EventTableSink.tableSchema(spark, dir).contains(widened))
   }
 
   test("EventTableSink.retention evicts old rows, drops fully-expired buckets, is idempotent and fenced") {
