@@ -4,11 +4,16 @@ import graft.ops.Ordering
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, Path => HPath}
 import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation, InMemoryFileIndex}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, IntegerType, StructType}
+import org.apache.spark.sql.types.{DataType, IntegerType, StringType, StructType}
+import org.apache.spark.unsafe.types.UTF8String
+import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream, DataOutputStream}
+import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import scala.collection.mutable
 import scala.util.Try
 
 /** Change-retention sink: idempotent upsert of CDC batches into an event
@@ -32,24 +37,39 @@ import scala.util.Try
   *     to in-window epoch dirs via partition filters.
   *
   * An upsert MERGEs last-writer-wins (version = `(commit_lsn,
-  * commit_idx)`, NULL lowest) in four Spark jobs, deciding on the driver:
+  * commit_idx)`, NULL lowest) in three Spark jobs, deciding on the driver:
   *   1. the batch is persisted once and its `(pk, version, bucket, epoch,
-  *      row id)` keys are collected;
-  *   2. one filtered scan of the touched buckets (`record_pk IN batch
-  *      pks`, pk and version columns only) collects the stored versions;
+  *      row id)` keys are collected (job 1);
+  *   2. the stored versions of the batch's pks are read on the driver
+  *      from the `_keys` index of every live dir in the touched buckets
+  *      — no Spark job;
   *   3. per pk, the batch's latest version wins only if it beats the
   *      stored one — a tie or an older row loses, so a full replay
   *      rewrites nothing and runs no further job;
   *   4. one merge — the affected dirs (the winners' dirs plus the dirs of
   *      the stored versions they supersede) minus the superseded pks,
-  *      union the winning rows — is written to a staging dir and swapped
-  *      in per `(bucket, epoch)`.
+  *      union the winning rows — is written to a staging dir (jobs 2-3:
+  *      shuffle and write), each staged dir gets its `_keys`, and the
+  *      dirs are swapped in per `(bucket, epoch)`.
   * Inserting new rows touches one epoch dir per bucket, never the table's
-  * history. Known scaling defect: step 2 still reads the pk column of
-  * EVERY file in the touched buckets, so the probe grows with retained
-  * history (O(history), not O(batch)); a per-dir key sidecar would bound
-  * it. With Delta/Iceberg this becomes a genuine `MERGE INTO` with
+  * history. With Delta/Iceberg this becomes a genuine `MERGE INTO` with
   * file-level pruning, same plan shape.
+  *
+  * Key index: each live `bucket=B/epoch=E` dir may hold a `_keys` file
+  * listing every non-NULL `record_pk` in the dir with its version — the
+  * file-level analogue of the reference's `(seq, record_pk)` conflict
+  * index. The `_` prefix hides it from every listing, and it lives
+  * inside its dir, so each rename of the dir (swap, `.old-` rollback,
+  * `.del-` drop, `.cmt-` promote) moves it with its rows; every write
+  * path replaces whole dirs, so the invariant is: if a dir has `_keys`,
+  * it is exact. The upsert and [[compact]] (when all its sources are
+  * indexed) write it; a dir without one (a table written before the
+  * index, a [[retention]] boundary rewrite) is scanned once by the next
+  * upsert that touches its bucket and recorded then. The probe still
+  * reads every `_keys` in the touched buckets — O(retained rows) bytes on
+  * the driver (22 B plus the pk's bytes a row), with no Spark job; a
+  * per-file bloom filter would bound it. `record_pk` must be a string
+  * column.
   *
   * Schema: the table's data schema is recorded in `_schema` at the root
   * (temp file + atomic rename), widened by an upsert BEFORE its swap, and
@@ -273,40 +293,67 @@ object EventTableSink {
   }
 
   /** Point lookup: the read-side payoff of bucketing — the key's bucket
-    * is computed driver-side and ONLY that one directory subtree is
-    * scanned (1/numBuckets of the table), the file-level analogue of the
-    * reference's `consumer_events` pk index.
+    * is computed driver-side ([[bucketOfKey]]) and, when every dir of that
+    * bucket has its `_keys`, ONLY the dirs listing the pk are scanned;
+    * otherwise the whole bucket subtree (1/numBuckets of the table). The
+    * file-level analogue of the reference's `consumer_events` pk index.
     */
   def lookup(spark: SparkSession, path: String, pk: String,
       numBuckets: Int = DefaultBuckets): DataFrame = {
     repair(path)
-    import spark.implicits._
-    val b = Seq(pk).toDF(keyCols.head)
-      .select(bucketOf(col(keyCols.head), numBuckets)).head().getInt(0)
+    val b = bucketOfKey(pk, numBuckets)
     val dir = bucketDir(path, b)
     if (!Files.exists(dir))
       scanTable(spark, path, Seq(path)).drop(BucketCol, EpochCol).limit(0)
-    else
-      scanTable(spark, path, Seq(dir.toString)).drop(BucketCol, EpochCol)
-        .filter(col(keyCols.head) === pk)
+    else {
+      val epochs = epochsOf(dir)
+      val dirs =
+        if (epochs.forall(e => Files.exists(keysFile(path, b, e))))
+          epochs.filter(e => keysOf(path, b, e).exists(_._1 == pk)).map(pairDir(path, b, _))
+        else Seq(dir)
+      if (dirs.isEmpty)
+        spark.createDataFrame(java.util.List.of[Row](), tableSchema(spark, path).get)
+      else
+        scanTable(spark, path, dirs.map(_.toString)).drop(BucketCol, EpochCol)
+          .filter(col(keyCols.head) === pk)
+    }
+  }
+
+  /** [[bucketOf]] for one pk on the driver, with no Spark plan: the
+    * `xxhash64` of the UTF-8 bytes with Spark's seed 42 (the seed itself
+    * for NULL), floor-mod `numBuckets`.
+    */
+  def bucketOfKey(pk: String, numBuckets: Int): Int = {
+    val h = if (pk == null) 42L else XXH64.hashUTF8String(UTF8String.fromString(pk), 42L)
+    Math.floorMod(h, numBuckets.toLong).toInt
   }
 
   /** Idempotently merge `batch` into the layout at `path`, rewriting only
     * the affected `(bucket, epoch)` dirs: those receiving winning batch
-    * rows plus those holding the stored versions they supersede. Four
-    * Spark jobs: the batch's keys to the driver, one filtered key probe,
-    * and the merge write's shuffle and write (none when every batch row
-    * loses, e.g. a full replay). With a `writer` handle, the epoch is
-    * checked on entry and re-verified before the schema widening and
-    * before each dir swap (see [[openWriter]] for the exact guarantee).
+    * rows plus those holding the stored versions they supersede. Three
+    * Spark jobs: the batch's keys to the driver, then the merge write's
+    * shuffle and write (none when every batch row loses, e.g. a full
+    * replay). The stored versions come from the `_keys` of each live dir
+    * in the touched buckets, read on the driver with only the batch's
+    * pks kept. A dir without `_keys` is scanned once on its key columns
+    * (one more job) and its `_keys` recorded: into its staged dir when
+    * the upsert rewrites it, else in place (temp file, fence check,
+    * rename). Every staged dir gets `_keys` before the swap — its old
+    * entries minus the superseded pks, plus the winners landing in it.
+    * With a `writer` handle, the epoch is checked on entry and
+    * re-verified before each in-place `_keys`, the schema widening and
+    * each dir swap (see [[openWriter]] for the exact guarantee).
     */
   def upsert(spark: SparkSession, batch: DataFrame, path: String,
       numBuckets: Int = DefaultBuckets,
       epochWidth: Long = DefaultEpochWidth,
       writer: Option[Writer] = None): Unit = {
+    val pk = keyCols.head
+    val pkType = batch.select(col(pk)).schema.head.dataType
+    require(pkType == StringType,
+      s"event-table $pk must be a string column, got ${pkType.simpleString}")
     fenceCheck(path, writer)
     repair(path)
-    val pk = keyCols.head
     val keyed = batch
       .withColumn(BucketCol, bucketOf(col(pk), numBuckets))
       .withColumn(EpochCol, epochOf(col(seqCols.head), epochWidth))
@@ -317,31 +364,44 @@ object EventTableSink {
       val rows = keyed.select(versionCols :+ col(RowId): _*).collect()
         .map(r => (stored(r), r.getLong(5)))
       if (rows.isEmpty) return
-      val latest: Map[Any, (Stored, Long)] = rows.groupBy(_._1.pk).map {
+      val latest: Map[String, (Stored, Long)] = rows.groupBy(_._1.pk).map {
         case (k, vs) => k -> vs.maxBy(_._1.version)(VersionOrder)
       }
-      // job 2: the stored versions of the batch's pks, one filtered scan
-      // of the pk column over the buckets the batch touches
       val recorded = tableSchema(spark, path)
       // dirs exist only once a schema is recorded or inferred
       def scanDirs(dirs: Seq[String]): DataFrame =
         scan(spark, path, recorded.get, dirs)
-      val touched = latest.values.map(_._1.bucket).toSeq.distinct.sorted
-        .map(bucketDir(path, _)).filter(Files.exists(_)).map(_.toString)
-      val prior: Map[Any, Seq[Stored]] =
-        if (touched.isEmpty) Map.empty
-        else scanDirs(touched)
-          .select(versionCols: _*).filter(keyIn(latest.keys.toSeq))
-          .collect().map(stored).toSeq.groupBy(_.pk)
+      // the stored versions of the batch's pks: every live dir of the
+      // touched buckets, from its `_keys` on the driver, or — a dir
+      // without one — from a scan of its key columns
+      val live = latest.values.map(_._1.bucket).toSeq.distinct.sorted
+        .flatMap(b => epochsOf(bucketDir(path, b)).map(b -> _))
+      val (indexed, unindexed) =
+        live.partition { case (b, e) => Files.exists(keysFile(path, b, e)) }
+      val scanned: Map[(Int, Int), Seq[(String, Version)]] =
+        if (unindexed.isEmpty) Map.empty
+        else scanDirs(unindexed.map { case (b, e) => pairDir(path, b, e).toString })
+          .select(versionCols: _*).collect().map(stored).toSeq.filter(_.pk != null)
+          .groupBy(s => (s.bucket, s.epoch)).map { case (d, ss) => d -> ss.map(s => s.pk -> s.version) }
+      val prior = mutable.ArrayBuffer.empty[Stored]
+      def probe(b: Int, e: Int)(k: String, v: Version): Unit =
+        if (latest.contains(k)) prior += Stored(k, v, b, e)
+      indexed.foreach { case (b, e) => readKeys(keysFile(path, b, e))(probe(b, e)) }
+      scanned.foreach { case ((b, e), kvs) => kvs.foreach { case (k, v) => probe(b, e)(k, v) } }
+      val priorOf = prior.toSeq.groupBy(_.pk)
       // last-writer-wins on the driver: a stored version that ties or
       // beats the batch's latest wins, so a full replay rewrites nothing
       val winners = latest.values.filter { case (b, _) =>
-        prior.getOrElse(b.pk, Nil).forall(s => VersionOrder.lt(s.version, b.version))
+        priorOf.getOrElse(b.pk, Nil).forall(s => VersionOrder.lt(s.version, b.version))
       }.toSeq
-      if (winners.isEmpty) return
-      val superseded = winners.flatMap { case (b, _) => prior.getOrElse(b.pk, Nil) }
+      val superseded = winners.flatMap { case (b, _) => priorOf.getOrElse(b.pk, Nil) }
       val affected = (winners.map(_._1) ++ superseded)
         .map(v => (v.bucket, v.epoch)).distinct.sorted
+      // the scanned dirs this upsert leaves as they are: record in place
+      unindexed.filterNot(affected.contains).foreach { case (b, e) =>
+        recordKeys(path, b, e, scanned.getOrElse((b, e), Nil), writer)
+      }
+      if (winners.isEmpty) return
       val winnerIds = winners.map(_._2).toSet
       val losers = rows.collect { case (_, id) if !winnerIds(id) => id }
       val fresh = (if (losers.isEmpty) keyed
@@ -349,6 +409,7 @@ object EventTableSink {
 
       val affectedDirs = affected.map { case (b, e) => pairDir(path, b, e) }
         .filter(Files.exists(_)).map(_.toString)
+      val supersededPks = superseded.map(_.pk).distinct
       // the affected dirs minus the superseded pks, plus the winners. NO
       // Try: if an affected dir cannot be read, the upsert must ABORT
       // (nothing mutated yet) rather than swap in a merge without it.
@@ -359,7 +420,6 @@ object EventTableSink {
         if (affectedDirs.isEmpty) fresh
         else {
           val kept = scanDirs(affectedDirs)
-          val supersededPks = superseded.map(_.pk).distinct
           // NULL-safe: NOT IN is NULL for a NULL pk, which must stay
           (if (supersededPks.isEmpty) kept
             else kept.filter(coalesce(!keyIn(supersededPks), lit(true))))
@@ -383,35 +443,113 @@ object EventTableSink {
           Seq(col(BucketCol), col(EpochCol)) ++ keyCols.map(col): _*)
         .write.partitionBy(BucketCol, EpochCol).mode(SaveMode.Overwrite)
         .parquet(tmp.toString)
-      // widen BEFORE the swap: a crash in between leaves a schema wider
-      // than the files (extra all-NULL columns), never files a reader
-      // cannot see
-      if (!recorded.contains(widened)) {
-        try { fenceCheck(path, writer); recordSchema(path, widened, replace = true) }
-        catch { case e: Throwable => deleteRecursively(tmp); throw e }
-      }
+      try {
+        // each staged dir's `_keys`: its old entries minus the superseded
+        // pks, plus the winners that land in it
+        val gone = supersededPks.toSet
+        val landing = winners.map(_._1).groupBy(w => (w.bucket, w.epoch))
+        affected.foreach { case (b, e) =>
+          val staged = stagedDir(tmp, b, e)
+          if (Files.exists(staged)) {
+            val old = scanned.getOrElse((b, e), keysOf(path, b, e))
+            writeKeys(staged.resolve(KeysFile), old.filterNot(kv => gone(kv._1)) ++
+              landing.getOrElse((b, e), Nil).filter(_.pk != null).map(w => w.pk -> w.version))
+          }
+        }
+        // widen BEFORE the swap: a crash in between leaves a schema wider
+        // than the files (extra all-NULL columns), never files a reader
+        // cannot see
+        if (!recorded.contains(widened)) {
+          fenceCheck(path, writer); recordSchema(path, widened, replace = true)
+        }
+      } catch { case e: Throwable => deleteRecursively(tmp); throw e }
       swapPairs(path, affected, tmp, writer)
     } finally keyed.unpersist()
   }
 
   private val RowId = "_graft_row_id"
 
+  /** `(commit_lsn, commit_idx)`, either part possibly NULL. */
+  private type Version = (Option[Long], Option[Long])
+
   /** One row's key, version and `(bucket, epoch)` dir. */
-  private final case class Stored(pk: Any, version: (Option[Long], Option[Long]),
-      bucket: Int, epoch: Int)
+  private final case class Stored(pk: String, version: Version, bucket: Int, epoch: Int)
 
   /** `(commit_lsn, commit_idx)` with NULL lowest — dedupLatest's order. */
-  private val VersionOrder = scala.math.Ordering[(Option[Long], Option[Long])]
+  private val VersionOrder = scala.math.Ordering[Version]
 
   private val versionCols: Seq[Column] = Seq(col(keyCols.head),
     col(seqCols.head).cast("long"), col(seqCols(1)).cast("long"),
     col(BucketCol), col(EpochCol))
 
-  private def stored(r: Row): Stored = Stored(r.get(0),
+  private def stored(r: Row): Stored = Stored(r.getString(0),
     (Option(r.get(1)).map(_.asInstanceOf[Long]), Option(r.get(2)).map(_.asInstanceOf[Long])),
     r.getInt(3), r.getInt(4))
 
-  private def keyIn(pks: Seq[Any]): Column = col(keyCols.head).isin(pks: _*)
+  private def keyIn(pks: Seq[String]): Column = col(keyCols.head).isin(pks: _*)
+
+  // ---- the per-dir key index ---------------------------------------------
+
+  private val KeysFile = "_keys"
+
+  private def keysFile(path: String, b: Int, e: Int): Path =
+    pairDir(path, b, e).resolve(KeysFile)
+
+  /** Write a `_keys` file: an entry count, then per entry the pk's UTF-8
+    * bytes behind their length, and a NULL flag plus a long for each
+    * version part.
+    */
+  private def writeKeys(f: Path, entries: Seq[(String, Version)]): Unit = {
+    val out = new DataOutputStream(new BufferedOutputStream(Files.newOutputStream(f)))
+    def part(v: Option[Long]): Unit = { out.writeBoolean(v.isEmpty); out.writeLong(v.getOrElse(0L)) }
+    try {
+      out.writeInt(entries.size)
+      entries.foreach { case (k, (lsn, idx)) =>
+        val bytes = k.getBytes(UTF_8)
+        out.writeInt(bytes.length); out.write(bytes)
+        part(lsn); part(idx)
+      }
+    } finally out.close()
+  }
+
+  /** Stream a `_keys` file's entries into `each`. */
+  private def readKeys(f: Path)(each: (String, Version) => Unit): Unit = {
+    val in = new DataInputStream(new BufferedInputStream(Files.newInputStream(f)))
+    def part(): Option[Long] = { val isNull = in.readBoolean(); val v = in.readLong()
+      if (isNull) None else Some(v) }
+    try {
+      var n = in.readInt()
+      while (n > 0) {
+        val bytes = new Array[Byte](in.readInt())
+        in.readFully(bytes)
+        val k = new String(bytes, UTF_8)
+        each(k, (part(), part()))
+        n -= 1
+      }
+    } finally in.close()
+  }
+
+  /** Every entry of a live dir's `_keys`; none for a dir not yet written. */
+  private def keysOf(path: String, b: Int, e: Int): Seq[(String, Version)] = {
+    val f = keysFile(path, b, e)
+    val out = mutable.ArrayBuffer.empty[(String, Version)]
+    if (Files.exists(f)) readKeys(f)((k, v) => out += k -> v)
+    out.toSeq
+  }
+
+  /** Record the `_keys` of a live dir this call does not rewrite: a
+    * `.tmp-keys-` file in the bucket dir (torn debris for [[repair]]),
+    * then a fence check and an atomic rename into the dir.
+    */
+  private def recordKeys(path: String, b: Int, e: Int,
+      entries: Seq[(String, Version)], writer: Option[Writer]): Unit = {
+    val tmp = bucketDir(path, b).resolve(s".tmp-keys-${System.nanoTime()}")
+    try {
+      writeKeys(tmp, entries)
+      fenceCheck(path, writer)
+      Files.move(tmp, keysFile(path, b, e), StandardCopyOption.ATOMIC_MOVE)
+    } catch { case t: Throwable => Files.deleteIfExists(tmp); throw t }
+  }
 
   /** Swap each affected pair's staged dir into place (or drop the live
     * dir when the merge emptied it), re-verifying the writer fence before
@@ -423,7 +561,7 @@ object EventTableSink {
       affected.foreach { case (b, e) =>
         fenceCheck(path, writer) // re-verify per swap: one-rename window
         val live = pairDir(path, b, e)
-        val staged = tmp.resolve(s"$BucketCol=$b").resolve(s"$EpochCol=$e")
+        val staged = stagedDir(tmp, b, e)
         val old = oldDir(path, b, e)
         if (Files.exists(staged)) {
           Files.createDirectories(bucketDir(path, b))
@@ -497,10 +635,7 @@ object EventTableSink {
     val groups: Seq[(Int, Int, Seq[Int])] = bucketDirs(root)
       .flatMap { bdir =>
         val b = bdir.getFileName.toString.stripPrefix(s"$BucketCol=").toInt
-        val es = list(bdir).map(_.getFileName.toString)
-          .filter(_.startsWith(s"$EpochCol="))
-          .map(_.stripPrefix(s"$EpochCol=").toInt)
-          .filter(_ <= uptoEpoch)
+        val es = epochsOf(bdir).filter(_ <= uptoEpoch)
         es.groupBy(e => e - Math.floorMod(e, groupEpochs)).toSeq.collect {
           case (label, srcs) if srcs.size >= 2 => (b, label, srcs.sorted)
         }
@@ -524,8 +659,12 @@ object EventTableSink {
       .parquet(tmp.toString)
     groups.foreach { case (b, label, srcs) =>
       fenceCheck(path, writer)
-      val staged = tmp.resolve(s"$BucketCol=$b").resolve(s"$EpochCol=$label")
+      val staged = stagedDir(tmp, b, label)
       if (Files.exists(staged)) {
+        // the combined dir holds exactly its sources' rows, so its
+        // `_keys` is their union when every source has one
+        if (srcs.forall(e => Files.exists(keysFile(path, b, e))))
+          writeKeys(staged.resolve(KeysFile), srcs.flatMap(keysOf(path, b, _)))
         // manifest written while still UNDER .tmp- (crash here = clean
         // rollback); the rename makes staging + manifest visible as one
         Files.writeString(staged.resolve(SourcesManifest),
@@ -747,6 +886,16 @@ object EventTableSink {
   private def pairDir(path: String, b: Int, e: Int): Path =
     bucketDir(path, b).resolve(s"$EpochCol=$e")
 
+  /** A `(bucket, epoch)` dir inside the staging dir `tmp` of a write. */
+  private def stagedDir(tmp: Path, b: Int, e: Int): Path =
+    tmp.resolve(s"$BucketCol=$b").resolve(s"$EpochCol=$e")
+
+  /** The live epochs of the bucket dir `bdir` (none if it is absent). */
+  private def epochsOf(bdir: Path): Seq[Int] =
+    if (!Files.exists(bdir)) Nil
+    else list(bdir).map(_.getFileName.toString)
+      .filter(_.startsWith(s"$EpochCol=")).map(_.stripPrefix(s"$EpochCol=").toInt)
+
   // dot-prefixed → invisible to Spark's partition discovery
   private def oldDir(path: String, b: Int, e: Int): Path =
     bucketDir(path, b).resolve(s".old-$EpochCol=$e")
@@ -784,8 +933,8 @@ object EventTableSink {
 
   /** Roll back any dir left half-swapped by a crash (live dir missing,
     * `.old-` backup present), finish any half-finished drop (`.del-`
-    * tombstones), and clear stale temp/backup dirs — at both the bucket
-    * and epoch level.
+    * tombstones), and clear stale temp/backup dirs and torn `.tmp-keys-`
+    * files — at both the bucket and epoch level.
     */
   def repair(path: String): Unit = {
     val root = Paths.get(path)

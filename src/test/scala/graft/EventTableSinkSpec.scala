@@ -1,11 +1,14 @@
 package graft
 
 import graft.sinks.EventTableSink
+import java.io.{BufferedInputStream, DataInputStream}
+import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Path, Paths}
 import java.nio.file.attribute.BasicFileAttributes
 import org.apache.spark.SpecListenerBus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.types._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
@@ -13,8 +16,9 @@ import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 /** The event-table upsert protocol: a generated last-writer-wins property
-  * against an in-memory model, the recorded `_schema`, and the job and
-  * rewrite budget of one upsert.
+  * against an in-memory model, the recorded `_schema`, the per-dir `_keys`
+  * index, the driver-side bucket of a pk, and the job and rewrite budget
+  * of one upsert.
   */
 class EventTableSinkSpec extends SparkSpec {
   import EventTableSinkSpec._
@@ -95,6 +99,7 @@ class EventTableSinkSpec extends SparkSpec {
       batch.foreach(r => if (model.get(r.pk).forall(m => newer.lt(m.version, r.version)))
         model(r.pk) = r)
       val at = s"sequence $n batch $i"
+      assertKeysExact(dir, at, indexed = true)
 
       val got = EventTableSink.read(spark, dir).collect().map(rec).toSet
       assert(got == model.values.toSet, s"$at: read diverges from the model " +
@@ -200,27 +205,187 @@ class EventTableSinkSpec extends SparkSpec {
       .toMap
   }
 
-  test("an upsert of a 20-row batch runs at most 4 Spark jobs; " +
-      "re-applying it rewrites no (bucket, epoch) dir") {
-    val dir = tmpTable("jobs")
-    EventTableSink.upsert(spark, v1(1 to 100, 8L), dir, Buckets, EpochWidth)
+  test("an upsert of a 20-row batch runs at most 3 Spark jobs, as many at 10x " +
+      "the epoch dirs; re-applying it runs 1 and rewrites no (bucket, epoch) dir") {
     // 10 newer versions of stored pks plus 10 new pks, in a later epoch
     val batch = frame((91 to 110).map(i =>
-      Rec(s"k$i", 130L + i, 0L, "update", -i.toLong, None)))
-    val jobs = jobsOf(EventTableSink.upsert(spark, batch, dir, Buckets, EpochWidth))
-    assert(jobs <= 4, s"$jobs jobs for one upsert")
+      Rec(s"k$i", 1000L + i, 0L, "update", -i.toLong, None)))
+    /** The jobs of `batch` into 100 stored pks spread over `epochs`
+      * epochs per bucket.
+      */
+    def upsertJobs(tag: String, epochs: Int): (String, Int) = {
+      val dir = tmpTable(tag)
+      EventTableSink.upsert(spark, frame((1 to 100).map(i =>
+        Rec(s"k$i", 8L + EpochWidth * (i % epochs), 0L, "insert", i.toLong, None))),
+        dir, Buckets, EpochWidth)
+      assert(dirKeys(dir).size == Buckets * epochs)
+      dir -> jobsOf(EventTableSink.upsert(spark, batch, dir, Buckets, EpochWidth))
+    }
+    val (dir, jobs) = upsertJobs("jobs", 1)
+    assert(jobs <= 3, s"$jobs jobs for one upsert")
     val before = dirKeys(dir)
     assert(before.nonEmpty)
     val replayJobs = jobsOf(EventTableSink.upsert(spark, batch, dir, Buckets, EpochWidth))
     assert(dirKeys(dir) == before, "the replay rewrote a dir")
-    assert(replayJobs <= 2, s"$replayJobs jobs for a replay that writes nothing")
+    assert(replayJobs <= 1, s"$replayJobs jobs for a replay that writes nothing")
     val out = EventTableSink.read(spark, dir).collect().map(rec)
     assert(out.length == 110)
     assert(out.filter(_.v < 0).map(_.pk).toSet == (91 to 110).map(i => s"k$i").toSet)
+    val (_, deepJobs) = upsertJobs("jobs10", 10)
+    assert(deepJobs == jobs, s"$deepJobs jobs at 10x the epoch dirs, $jobs at 1x")
+  }
+
+  // ---- the `_keys` index ---------------------------------------------------
+
+  /** Every live dir's `_keys` lists exactly the non-NULL `(pk, version)`s a
+    * Spark read of the dir returns; with `indexed`, every dir has one.
+    */
+  private def assertKeysExact(dir: String, at: String, indexed: Boolean): Unit =
+    keyIndex(spark, dir).foreach { case (d, (keys, stored)) =>
+      assert(keys.isDefined || !indexed, s"$at: $d has no _keys")
+      keys.foreach(k => assert(k == stored, s"$at: $d _keys $k, stored $stored"))
+    }
+
+  private def indexedDirs(dir: String): Set[String] =
+    keyIndex(spark, dir).collect { case (d, (Some(_), _)) => d }.toSet
+
+  test("_keys after retention's boundary rewrite and compact: absent or " +
+      "exact, and the next upsert indexes the buckets it touches") {
+    val dir = tmpTable("keys_ret")
+    // lsn 0..413 in epochs 0..6 of both buckets
+    val rows = (0 until 60).map(i => Rec(s"p$i", 7L * i, 0L, "insert", i.toLong, None))
+    EventTableSink.upsert(spark, frame(rows), dir, Buckets, EpochWidth)
+    assertKeysExact(dir, "upsert", indexed = true)
+    // commit_lsn as the retention clock: epochs 0-1 drop, epoch 2 is cut
+    assert(EventTableSink.retention(spark, dir, "commit_lsn", lit(150L)) > 0)
+    val model = mutable.HashMap(rows.filter(_.lsn >= 150L).map(r => r.pk -> r): _*)
+    assertKeysExact(dir, "retention", indexed = false)
+    val rewritten = dirKeys(dir).keySet -- indexedDirs(dir)
+    assert(rewritten.nonEmpty && rewritten.forall(_.endsWith("epoch=2")), rewritten)
+    // groups {2, 3} (one source unindexed) and {4, 5} (both indexed)
+    assert(EventTableSink.compact(spark, dir, uptoEpoch = 5, groupEpochs = 2) > 0)
+    assertKeysExact(dir, "compact", indexed = false)
+    assert(indexedDirs(dir).exists(_.endsWith("epoch=4")))
+    assert(rewritten.forall(d => !indexedDirs(dir).contains(d)))
+    val batch = Seq(Rec("p30", 500L, 0L, "update", -30L, None),
+      Rec("p59", 501L, 0L, "delete", -59L, None)) ++
+      (60 until 70).map(i => Rec(s"p$i", 502L + i, 0L, "insert", i.toLong, None))
+    EventTableSink.upsert(spark, frame(batch), dir, Buckets, EpochWidth)
+    batch.foreach(r => model(r.pk) = r)
+    assert(EventTableSink.read(spark, dir).collect().map(rec).toSet == model.values.toSet)
+    val touched = batch.map(r => s"bucket=${EventTableSink.bucketOfKey(r.pk, Buckets)}/").toSet
+    assertKeysExact(dir, "upsert after compact", indexed = false)
+    assert(dirKeys(dir).keySet.filter(d => touched.exists(d.startsWith)) == indexedDirs(dir)
+      .filter(d => touched.exists(d.startsWith)))
+  }
+
+  test("_keys: a table without any (files only) upserts correctly and is " +
+      "indexed, in place for dirs it keeps and staged for dirs it rewrites") {
+    val dir = tmpTable("keys_legacy")
+    EventTableSink.upsert(spark, v1(1 to 20, 8L), dir, Buckets, EpochWidth)
+    EventTableSink.upsert(spark, v1(21 to 40, 72L), dir, Buckets, EpochWidth)
+    def dropKeys(): Unit = dirKeys(dir).keys.foreach(d =>
+      Files.deleteIfExists(Paths.get(dir).resolve(d).resolve("_keys")))
+    dropKeys()
+    assert(indexedDirs(dir).isEmpty)
+    def lookup(pk: String): Set[Rec] =
+      EventTableSink.lookup(spark, dir, pk, Buckets).collect().map(rec).toSet
+    // an unindexed bucket is scanned whole
+    assert(lookup("k5") == Set(Rec("k5", 8L, 0L, "insert", 5L, None)))
+    // newer versions of epoch-1 pks and new pks: epoch 0 is kept, epoch 1
+    // and the new epoch are rewritten
+    val batch = frame((31 to 50).map(i => Rec(s"k$i", 200L + i, 0L, "update", -i.toLong, None)))
+    EventTableSink.upsert(spark, batch, dir, Buckets, EpochWidth)
+    val want = (1 to 30).map(i => Rec(s"k$i", if (i <= 20) 8L else 72L, 0L, "insert", i.toLong,
+      None)) ++ (31 to 50).map(i => Rec(s"k$i", 200L + i, 0L, "update", -i.toLong, None))
+    assert(EventTableSink.read(spark, dir).collect().map(rec).toSet == want.toSet)
+    assertKeysExact(dir, "legacy upsert", indexed = true)
+    // an indexed bucket: only the dir listing the pk, or no scan at all
+    assert(lookup("k5") == Set(Rec("k5", 8L, 0L, "insert", 5L, None)))
+    assert(lookup("k45") == Set(Rec("k45", 245L, 0L, "update", -45L, None)))
+    assert(lookup("absent").isEmpty)
+    // a replay into an unindexed table rewrites nothing and indexes it
+    dropKeys()
+    val before = dirKeys(dir)
+    EventTableSink.upsert(spark, batch, dir, Buckets, EpochWidth)
+    assert(dirKeys(dir) == before, "the replay rewrote a dir")
+    assertKeysExact(dir, "legacy replay", indexed = true)
+  }
+
+  test("an upsert whose record_pk is not a string fails on entry and writes nothing") {
+    val dir = tmpTable("intpk")
+    import spark.implicits._
+    val e = intercept[IllegalArgumentException] {
+      EventTableSink.upsert(spark, Seq((1, 8L, 0L)).toDF("record_pk", "commit_lsn", "commit_idx"),
+        dir, Buckets, EpochWidth)
+    }
+    assert(e.getMessage.contains("record_pk must be a string column"), e.getMessage)
+    assert(!Files.exists(Paths.get(dir)))
+  }
+
+  test("bucketOfKey computes bucketOf on the driver, for empty and non-ASCII pks") {
+    val rnd = new scala.util.Random(20261019L)
+    val pks = Seq("", " ", "é", "日本語", "\uD83D\uDE42", "a\u0000b") ++
+      (0 until 1000).map(i => if (i % 2 == 0) s"k$i"
+        else Iterator.continually(rnd.nextPrintableChar()).take(rnd.nextInt(12)).mkString +
+          { val cp = 0x80 + rnd.nextInt(0x30000) // no lone surrogates
+            new String(Character.toChars(if (cp >= 0xD800 && cp < 0xE000) cp - 0x800 else cp)) })
+    import spark.implicits._
+    Seq(1, 2, 7, 8, 64).foreach { n =>
+      val want = pks.toDF("pk").select(col("pk"), EventTableSink.bucketOf(col("pk"), n))
+        .collect().map(r => r.getString(0) -> r.getInt(1)).toMap
+      pks.foreach(pk => assert(EventTableSink.bucketOfKey(pk, n) == want(pk), s"$pk mod $n"))
+    }
   }
 }
 
 object EventTableSinkSpec {
+  /** A `_keys` entry: pk, commit_lsn, commit_idx. */
+  type Key = (String, Option[Long], Option[Long])
+
+  /** A `_keys` file's entries: a count, then per entry the pk's UTF-8
+    * bytes behind their length and a NULL flag plus a long per version
+    * part.
+    */
+  def readKeys(f: Path): Seq[Key] = {
+    val in = new DataInputStream(new BufferedInputStream(Files.newInputStream(f)))
+    def part(): Option[Long] = { val isNull = in.readBoolean(); val v = in.readLong()
+      if (isNull) None else Some(v) }
+    try Seq.fill(in.readInt()) {
+      val bytes = new Array[Byte](in.readInt())
+      in.readFully(bytes)
+      val lsn = part()
+      (new String(bytes, UTF_8), lsn, part())
+    } finally in.close()
+  }
+
+  /** Per live `bucket=B/epoch=E` dir: its `_keys` entries (None without
+    * one) and the non-NULL `(pk, version)`s a Spark read of it returns,
+    * both sorted.
+    */
+  def keyIndex(spark: SparkSession, dir: String): Map[String, (Option[Seq[Key]], Seq[Key])] = {
+    def ls(p: Path): Seq[Path] = {
+      val s = Files.list(p)
+      try s.iterator().asScala.toList finally s.close()
+    }
+    val root = Paths.get(dir)
+    val dirs = ls(root).filter(_.getFileName.toString.startsWith("bucket=")).flatMap(b =>
+      ls(b).filter(_.getFileName.toString.startsWith("epoch=")))
+    if (dirs.isEmpty) return Map.empty
+    val stored = spark.read.parquet(dir).filter(col("record_pk").isNotNull)
+      .select(col("record_pk"), col("commit_lsn").cast("long"), col("commit_idx").cast("long"),
+        col("bucket"), col("epoch")).collect()
+      .groupBy(r => s"bucket=${r.getInt(3)}/epoch=${r.getInt(4)}")
+      .map { case (d, rs) => d -> rs.map(r => (r.getString(0),
+        Option(r.get(1)).map(_.asInstanceOf[Long]), Option(r.get(2)).map(_.asInstanceOf[Long])))
+        .toSeq.sorted }
+    dirs.map { d =>
+      val rel = root.relativize(d).toString
+      val keys = Some(d.resolve("_keys")).filter(Files.exists(_)).map(readKeys(_).sorted)
+      rel -> (keys, stored.getOrElse(rel, Nil))
+    }.toMap
+  }
+
   final case class Rec(pk: String, lsn: Long, idx: Long, action: String,
       v: Long, extra: Option[Long]) {
     def version: (Long, Long) = (lsn, idx)

@@ -588,6 +588,39 @@ class StreamingSpec extends SparkSpec {
       .map(r => (r.getString(0), r.getDouble(1))).sortBy(_._1).toSeq ==
       (1 to 5).map(i => (i.toString, 100.0 + i)).sortBy(_._1))
     assert(EventTableSink.tableSchema(spark, dir).contains(widened))
+
+    // crash state 5: an upsert died mid-swap with `_keys` in play — the
+    // live dir moved to its `.old-` backup (with its `_keys`), the staged
+    // dir (with the new `_keys`) still under `.tmp-`, and a torn
+    // `.tmp-keys-` file in a bucket dir from an in-place recording
+    def keysExact(): Unit = graft.EventTableSinkSpec.keyIndex(spark, dir).foreach {
+      case (d, (keys, stored)) => assert(keys.contains(stored), s"$d: _keys $keys, stored $stored")
+    }
+    keysExact()
+    val before = EventTableSink.read(spark, dir).collect().toSet
+    val live = Paths.get(dir).resolve("bucket=0/epoch=0")
+    Files.move(live, Paths.get(dir).resolve("bucket=0/.old-epoch=0"))
+    val staged5 = Paths.get(dir).resolve(".tmp-555/bucket=0/epoch=0")
+    Files.createDirectories(staged5)
+    Files.copy(Paths.get(dir).resolve("bucket=0/.old-epoch=0/_keys"), staged5.resolve("_keys"))
+    Files.writeString(staged5.resolve("part-0.parquet"), "torn")
+    val tornKeys = Paths.get(dir).resolve("bucket=1/.tmp-keys-777")
+    Files.writeString(tornKeys, "torn")
+    val healed5 = EventTableSink.read(spark, dir).collect().toSet
+    assert(healed5 == before)
+    assert(!Files.exists(tornKeys) && !Files.exists(Paths.get(dir).resolve(".tmp-555")))
+    keysExact()
+    // replaying the crashed batch (newer versions of pks 6..10) converges
+    val batch5 = (6 to 10).map(i => ev(24, i.toLong, "7", i.toString,
+      value = 200.0 + i)).toDF().withColumn("added", lit(8L))
+    EventTableSink.upsert(spark, batch5, dir, numBuckets = 4)
+    EventTableSink.upsert(spark, batch5, dir, numBuckets = 4)
+    val converged5 = EventTableSink.read(spark, dir)
+    assert(converged5.count() == 50)
+    assert(converged5.filter(col("added") === 8L).select("record_pk", "record_value")
+      .collect().map(r => (r.getString(0), r.getDouble(1))).sortBy(_._1).toSeq ==
+      (6 to 10).map(i => (i.toString, 200.0 + i)).sortBy(_._1))
+    keysExact()
   }
 
   test("EventTableSink.retention evicts old rows, drops fully-expired buckets, is idempotent and fenced") {
