@@ -48,9 +48,9 @@ import scala.util.Try
   *      rewrites nothing and runs no further job;
   *   4. one merge — the affected dirs (the winners' dirs plus the dirs of
   *      the stored versions they supersede) minus the superseded pks,
-  *      union the winning rows — is written to a staging dir (jobs 2-3:
-  *      shuffle and write), each staged dir gets its `_keys`, and the
-  *      dirs are swapped in per `(bucket, epoch)`.
+  *      union the winning rows — is staged (jobs 2-3: shuffle and write),
+  *      each staged dir gets its `_keys`, and one commit replaces the
+  *      affected dirs.
   * Inserting new rows touches one epoch dir per bucket, never the table's
   * history. With Delta/Iceberg this becomes a genuine `MERGE INTO` with
   * file-level pruning, same plan shape.
@@ -58,33 +58,42 @@ import scala.util.Try
   * Key index: each live `bucket=B/epoch=E` dir may hold a `_keys` file
   * listing every non-NULL `record_pk` in the dir with its version — the
   * file-level analogue of the reference's `(seq, record_pk)` conflict
-  * index. The `_` prefix hides it from every listing, and it lives
-  * inside its dir, so each rename of the dir (swap, `.old-` rollback,
-  * `.del-` drop, `.cmt-` promote) moves it with its rows; every write
-  * path replaces whole dirs, so the invariant is: if a dir has `_keys`,
-  * it is exact. The upsert and [[compact]] (when all its sources are
-  * indexed) write it; a dir without one (a table written before the
-  * index, a [[retention]] boundary rewrite) is scanned once by the next
-  * upsert that touches its bucket and recorded then. The probe still
-  * reads every `_keys` in the touched buckets — O(retained rows) bytes on
-  * the driver (22 B plus the pk's bytes a row), with no Spark job; a
-  * per-file bloom filter would bound it. `record_pk` must be a string
-  * column.
+  * index. The `_` prefix hides it from every listing. It is staged inside
+  * its new dir and moves in with it, or, for a live dir indexed in place,
+  * is staged alone and moved in by the same commit; every write path
+  * replaces whole dirs, so the invariant is: if a dir has `_keys`, it is
+  * exact. The upsert and [[compact]] (when all its sources are indexed)
+  * write it; a dir without one (a table written before the index, a
+  * [[retention]] boundary rewrite) is scanned once by the next upsert
+  * that touches its bucket and indexed then. The probe still reads every
+  * `_keys` in the touched buckets — O(retained rows) bytes on the driver
+  * (22 B plus the pk's bytes a row), with no Spark job; a per-file bloom
+  * filter would bound it. `record_pk` must be a string column.
   *
   * Schema: the table's data schema is recorded in `_schema` at the root
-  * (temp file + atomic rename), widened by an upsert BEFORE its swap, and
-  * every scan reads with it instead of a `mergeSchema` footer pass —
+  * (temp file + atomic rename), widened by an upsert BEFORE its commit,
+  * and every scan reads with it instead of a `mergeSchema` footer pass —
   * files older than an upstream schema change read back NULL-padded. A
   * table written before `_schema` existed is inferred once and recorded.
   *
-  * Crash safety: staged writes to a dot-prefixed temp dir (invisible to
-  * Spark's file index), per-(bucket,epoch) two-rename swaps with `.old-`
-  * backups, one-way `.del-` tombstone renames for dropped dirs; [[repair]]
-  * runs before every read/upsert and rolls a half-swapped dir back (or
-  * finishes a half-finished drop), so a crashed batch never loses the
-  * table and replaying the batch is idempotent — W6's exactly-once
-  * contract without a transactional store. A crash after the widening
-  * but before the swap leaves extra all-NULL columns, never hidden data.
+  * Crash safety, one protocol for every mutation: it first builds a
+  * staging dir `.tmp-<id>` at the table root (dot-prefixed, so invisible
+  * to Spark's file index) holding its new `(bucket, epoch)` dirs with
+  * their `_keys`, the `_keys` of dirs it indexes in place, and a manifest
+  * of `replace` / `drop` / `index` ops. After the fence check and any
+  * widening of `_schema` or `_compaction`, ONE atomic rename to
+  * `.txn-<id>` commits it; [[finish]] then applies the ops (a replaced or
+  * dropped live dir moves into the txn dir, a staged dir or `_keys` file
+  * moves into place) and deletes the spent txn. [[repair]] runs before
+  * every read and mutation: it deletes every `.tmp-` and finishes every
+  * `.txn-`, so a crash before the commit rename rolls the mutation back
+  * and a crash from the rename on rolls it forward — readers see a
+  * mutation whole or not at all, like the reference's one statement per
+  * batch, and replaying a batch is idempotent (W6's exactly-once contract
+  * without a transactional store). Every mutation repairs first, so at
+  * most one `.txn-` exists at a time. A crash after the widening but
+  * before the commit leaves extra all-NULL columns (or a wider
+  * compaction span), never hidden data.
   *
   * `numBuckets` and `epochWidth` are per-table layout constants chosen at
   * creation and must never change for an existing table (like the
@@ -130,7 +139,7 @@ object EventTableSink {
 
   /** Handle for the table's single legitimate writer at a given epoch —
     * see [[openWriter]]. A fenced handle's upserts throw instead of
-    * interleaving dir swaps with the newer owner.
+    * interleaving commits with the newer owner.
     */
   final class Writer private[sinks] (val path: String, val epoch: Long) {
     def upsert(spark: SparkSession, batch: DataFrame,
@@ -140,40 +149,34 @@ object EventTableSink {
         Some(this))
   }
 
-  private def epochFile(path: String): Path = Paths.get(path).resolve("_epoch")
-
   /** Current writer epoch (0 = table never opened with fencing). The
     * `_epoch` name is underscore-prefixed so Spark's file index ignores it.
     */
   def currentEpoch(path: String): Long = {
-    val f = epochFile(path)
+    val f = Paths.get(path).resolve("_epoch")
     if (!Files.exists(f)) 0L
     else Try(new String(Files.readAllBytes(f), "UTF-8").trim.toLong).getOrElse(0L)
   }
 
   /** Take over the table as its single writer: bump the `_epoch` file
     * (temp + atomic rename) and return a fenced handle. Every handle from
-    * an earlier epoch is thereby fenced — its next upsert fails fast
-    * rather than racing dir swaps against the new owner. Two streams
+    * an earlier epoch is thereby fenced — its next mutation fails fast
+    * rather than racing commits against the new owner. Two streams
     * upserting one table MUST each hold a current handle; the second
     * `openWriter` wins (last-writer-wins at the granularity of handles).
     *
     * The guarantee is BEST-EFFORT race narrowing, not mutual exclusion:
-    * the epoch is re-verified immediately before EACH dir swap (one
-    * rename's worth of window), but a concurrent `openWriter` landing
-    * inside that window can still interleave one swap with the new
-    * owner. Upsert idempotency makes the outcome recoverable (the new
-    * owner's replay converges); a hard guarantee needs a lock service or
-    * a transactional table format.
+    * the epoch is checked on entry, before any `_schema` widening and
+    * immediately before the commit rename (one rename's worth of window),
+    * but a concurrent `openWriter` landing inside that window can still
+    * commit one mutation after the new owner took over. Upsert
+    * idempotency makes the outcome recoverable (the new owner's replay
+    * converges); a hard guarantee needs a lock service or a
+    * transactional table format.
     */
   def openWriter(path: String): Writer = {
-    val root = Paths.get(path)
-    Files.createDirectories(root)
     val next = currentEpoch(path) + 1
-    val tmp = root.resolve(s".epoch-${System.nanoTime()}")
-    Files.write(tmp, next.toString.getBytes("UTF-8"))
-    Files.move(tmp, epochFile(path), StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
+    writeRootFile(path, "_epoch", next.toString)
     new Writer(path, next)
   }
 
@@ -196,8 +199,6 @@ object EventTableSink {
     scanTable(spark, path, Seq(path)).drop(BucketCol, EpochCol)
   }
 
-  private def schemaFile(path: String): Path = Paths.get(path).resolve("_schema")
-
   /** The table's data schema (layout columns excluded): the union of
     * every schema its upserts have written, recorded in `_schema` at the
     * table root. A table written before `_schema` existed is inferred
@@ -206,14 +207,15 @@ object EventTableSink {
     * with no data dirs yet.
     */
   def tableSchema(spark: SparkSession, path: String): Option[StructType] = {
-    val f = schemaFile(path)
+    val f = Paths.get(path).resolve("_schema")
     if (Files.exists(f))
       Some(DataType.fromJson(Files.readString(f)).asInstanceOf[StructType])
     else if (!Files.exists(Paths.get(path)) || bucketDirs(Paths.get(path)).isEmpty) None
     else {
       val data = dataSchema(
         spark.read.option("mergeSchema", "true").parquet(path).schema)
-      recordSchema(path, data, replace = false)
+      // never overwrites a writer's wider one
+      writeRootFile(path, "_schema", data.json, replace = false)
       Some(data)
     }
   }
@@ -225,21 +227,21 @@ object EventTableSink {
     StructType(s.fields.filterNot(f => f.name == BucketCol || f.name == EpochCol)
       .map(_.copy(nullable = true)))
 
-  /** Write `_schema`: a temp file, then an atomic rename over the old one
-    * (`replace`, the upsert's widening), or a hard link that fails if one
-    * exists already — recording an inferred schema never overwrites a
-    * writer's wider one.
+  /** Write the root file `name` (`_epoch`, `_schema`, `_compaction`)
+    * through a `.tmp-` temp file, which [[repair]] deletes if a crash
+    * strands it: an atomic rename over the old file, or, without
+    * `replace`, a hard link that fails if the file exists already.
     */
-  private def recordSchema(path: String, schema: StructType,
-      replace: Boolean): Unit = {
+  private def writeRootFile(path: String, name: String, content: String,
+      replace: Boolean = true): Unit = {
     val root = Paths.get(path)
     Files.createDirectories(root)
-    val tmp = root.resolve(s".schema-${System.nanoTime()}")
-    Files.writeString(tmp, schema.json)
+    val tmp = root.resolve(s".tmp-${System.nanoTime()}$name")
+    Files.writeString(tmp, content)
     if (replace)
-      Files.move(tmp, schemaFile(path), StandardCopyOption.ATOMIC_MOVE,
+      Files.move(tmp, root.resolve(name), StandardCopyOption.ATOMIC_MOVE,
         StandardCopyOption.REPLACE_EXISTING)
-    else { Try(Files.createLink(schemaFile(path), tmp)); Files.delete(tmp) }
+    else { Try(Files.createLink(root.resolve(name), tmp)); Files.delete(tmp) }
   }
 
   /** The parquet files under `dirs` (the table root, or dirs inside it)
@@ -336,24 +338,32 @@ object EventTableSink {
     * replay). The stored versions come from the `_keys` of each live dir
     * in the touched buckets, read on the driver with only the batch's
     * pks kept. A dir without `_keys` is scanned once on its key columns
-    * (one more job) and its `_keys` recorded: into its staged dir when
-    * the upsert rewrites it, else in place (temp file, fence check,
-    * rename). Every staged dir gets `_keys` before the swap — its old
-    * entries minus the superseded pks, plus the winners landing in it.
-    * With a `writer` handle, the epoch is checked on entry and
-    * re-verified before each in-place `_keys`, the schema widening and
-    * each dir swap (see [[openWriter]] for the exact guarantee).
+    * (one more job) and indexed, in its new dir when the upsert rewrites
+    * it, else in place. Every staged dir gets `_keys` — its old entries
+    * minus the superseded pks, plus the winners landing in it. All of it
+    * is ONE commit (see the header): after a crash a winner's pk is never
+    * missing from both its old and its new dir. With a `writer` handle,
+    * the epoch is checked on entry, before the schema widening and before
+    * the commit (see [[openWriter]] for the exact guarantee).
     */
   def upsert(spark: SparkSession, batch: DataFrame, path: String,
       numBuckets: Int = DefaultBuckets,
       epochWidth: Long = DefaultEpochWidth,
       writer: Option[Writer] = None): Unit = {
-    val pk = keyCols.head
-    val pkType = batch.select(col(pk)).schema.head.dataType
+    val pkType = batch.select(col(keyCols.head)).schema.head.dataType
     require(pkType == StringType,
-      s"event-table $pk must be a string column, got ${pkType.simpleString}")
+      s"event-table ${keyCols.head} must be a string column, got ${pkType.simpleString}")
     fenceCheck(path, writer)
     repair(path)
+    run(path, stageUpsert(spark, batch, path, numBuckets, epochWidth), writer)
+  }
+
+  /** The staging step of [[upsert]]: decide the winners and stage the
+    * merge; None when the batch changes nothing and indexes nothing.
+    */
+  private[graft] def stageUpsert(spark: SparkSession, batch: DataFrame, path: String,
+      numBuckets: Int, epochWidth: Long): Option[Staged] = {
+    val pk = keyCols.head
     val keyed = batch
       .withColumn(BucketCol, bucketOf(col(pk), numBuckets))
       .withColumn(EpochCol, epochOf(col(seqCols.head), epochWidth))
@@ -363,7 +373,7 @@ object EventTableSink {
       // job 1: every batch row's key, version and target dir
       val rows = keyed.select(versionCols :+ col(RowId): _*).collect()
         .map(r => (stored(r), r.getLong(5)))
-      if (rows.isEmpty) return
+      if (rows.isEmpty) return None
       val latest: Map[String, (Stored, Long)] = rows.groupBy(_._1.pk).map {
         case (k, vs) => k -> vs.maxBy(_._1.version)(VersionOrder)
       }
@@ -397,73 +407,62 @@ object EventTableSink {
       val superseded = winners.flatMap { case (b, _) => priorOf.getOrElse(b.pk, Nil) }
       val affected = (winners.map(_._1) ++ superseded)
         .map(v => (v.bucket, v.epoch)).distinct.sorted
-      // the scanned dirs this upsert leaves as they are: record in place
-      unindexed.filterNot(affected.contains).foreach { case (b, e) =>
-        recordKeys(path, b, e, scanned.getOrElse((b, e), Nil), writer)
-      }
-      if (winners.isEmpty) return
-      val winnerIds = winners.map(_._2).toSet
-      val losers = rows.collect { case (_, id) if !winnerIds(id) => id }
-      val fresh = (if (losers.isEmpty) keyed
-        else keyed.filter(!col(RowId).isin(losers.toSeq: _*))).drop(RowId)
-
-      val affectedDirs = affected.map { case (b, e) => pairDir(path, b, e) }
-        .filter(Files.exists(_)).map(_.toString)
-      val supersededPks = superseded.map(_.pk).distinct
-      // the affected dirs minus the superseded pks, plus the winners. NO
-      // Try: if an affected dir cannot be read, the upsert must ABORT
-      // (nothing mutated yet) rather than swap in a merge without it.
-      // allowMissingColumns both ways: an upstream schema change (column
-      // added or dropped mid-stream, S2b relation change) widens the
-      // table with nulls instead of silently DROPPING the batch's columns.
-      val merged =
-        if (affectedDirs.isEmpty) fresh
-        else {
-          val kept = scanDirs(affectedDirs)
-          // NULL-safe: NOT IN is NULL for a NULL pk, which must stay
-          (if (supersededPks.isEmpty) kept
-            else kept.filter(coalesce(!keyIn(supersededPks), lit(true))))
-            .unionByName(fresh, allowMissingColumns = true)
-        }
-      val data = dataSchema(merged.schema)
-      val widened = recorded.fold(data) { r =>
-        StructType(r.fields.map(f => data.find(_.name == f.name).getOrElse(f)) ++
-          data.fields.filterNot(f => r.fieldNames.contains(f.name)))
-      }
-
-      val tmp = Paths.get(path).resolve(s".tmp-${System.nanoTime()}")
-      // cluster by (bucket, epoch) before the partitioned write: one task
-      // owns each affected dir, so it holds a few contiguous files, not
-      // (writer tasks × dirs) fragments — and the swap moves fewer files.
-      // Rows are additionally SORTED by key within each dir so parquet
-      // min/max column-chunk stats are tight: a point lookup prunes row
-      // groups INSIDE the dir, not just the dir itself.
-      merged.repartition(col(BucketCol), col(EpochCol))
-        .sortWithinPartitions(
-          Seq(col(BucketCol), col(EpochCol)) ++ keyCols.map(col): _*)
-        .write.partitionBy(BucketCol, EpochCol).mode(SaveMode.Overwrite)
-        .parquet(tmp.toString)
-      try {
-        // each staged dir's `_keys`: its old entries minus the superseded
-        // pks, plus the winners that land in it
-        val gone = supersededPks.toSet
-        val landing = winners.map(_._1).groupBy(w => (w.bucket, w.epoch))
-        affected.foreach { case (b, e) =>
-          val staged = stagedDir(tmp, b, e)
-          if (Files.exists(staged)) {
-            val old = scanned.getOrElse((b, e), keysOf(path, b, e))
-            writeKeys(staged.resolve(KeysFile), old.filterNot(kv => gone(kv._1)) ++
-              landing.getOrElse((b, e), Nil).filter(_.pk != null).map(w => w.pk -> w.version))
+      // the scanned dirs this upsert leaves as they are: indexed in place
+      val inPlace = unindexed.filterNot(affected.contains)
+      stage(path) { tmp =>
+        val (merge, widen) = if (winners.isEmpty) (Nil, Nil) else {
+          val winnerIds = winners.map(_._2).toSet
+          val losers = rows.collect { case (_, id) if !winnerIds(id) => id }
+          val fresh = (if (losers.isEmpty) keyed
+            else keyed.filter(!col(RowId).isin(losers.toSeq: _*))).drop(RowId)
+          val affectedDirs = affected.map { case (b, e) => pairDir(path, b, e) }
+            .filter(Files.exists(_)).map(_.toString)
+          val supersededPks = superseded.map(_.pk).distinct
+          // the affected dirs minus the superseded pks, plus the winners.
+          // NO Try: if an affected dir cannot be read, the upsert must
+          // ABORT (nothing committed) rather than commit a merge without
+          // it. allowMissingColumns both ways: an upstream schema change
+          // (column added or dropped mid-stream, S2b relation change)
+          // widens the table with nulls instead of silently DROPPING the
+          // batch's columns.
+          val merged =
+            if (affectedDirs.isEmpty) fresh
+            else {
+              val kept = scanDirs(affectedDirs)
+              // NULL-safe: NOT IN is NULL for a NULL pk, which must stay
+              (if (supersededPks.isEmpty) kept
+                else kept.filter(coalesce(!keyIn(supersededPks), lit(true))))
+                .unionByName(fresh, allowMissingColumns = true)
+            }
+          val data = dataSchema(merged.schema)
+          val widened = recorded.fold(data) { r =>
+            StructType(r.fields.map(f => data.find(_.name == f.name).getOrElse(f)) ++
+              data.fields.filterNot(f => r.fieldNames.contains(f.name)))
           }
+          writeStaged(merged, tmp)
+          // each staged dir's `_keys`: its old entries minus the superseded
+          // pks, plus the winners that land in it; an affected dir the
+          // merge emptied (all its rows superseded) is dropped
+          val gone = supersededPks.toSet
+          val landing = winners.map(_._1).groupBy(w => (w.bucket, w.epoch))
+          val ops = affected.map { case (b, e) =>
+            val staged = tmp.resolve(relDir(b, e))
+            if (!Files.exists(staged)) Op(Drop, b, e)
+            else {
+              val old = scanned.getOrElse((b, e), keysOf(path, b, e))
+              writeKeys(staged.resolve(KeysFile), old.filterNot(kv => gone(kv._1)) ++
+                landing.getOrElse((b, e), Nil).filter(_.pk != null).map(w => w.pk -> w.version))
+              Op(Replace, b, e)
+            }
+          }
+          (ops, if (recorded.contains(widened)) Nil else Seq("_schema" -> widened.json))
         }
-        // widen BEFORE the swap: a crash in between leaves a schema wider
-        // than the files (extra all-NULL columns), never files a reader
-        // cannot see
-        if (!recorded.contains(widened)) {
-          fenceCheck(path, writer); recordSchema(path, widened, replace = true)
+        inPlace.foreach { case (b, e) =>
+          val staged = Files.createDirectories(tmp.resolve(relDir(b, e)))
+          writeKeys(staged.resolve(KeysFile), scanned.getOrElse((b, e), Nil))
         }
-      } catch { case e: Throwable => deleteRecursively(tmp); throw e }
-      swapPairs(path, affected, tmp, writer)
+        (merge ++ inPlace.map { case (b, e) => Op(Index, b, e) }, widen)
+      }
     } finally keyed.unpersist()
   }
 
@@ -537,67 +536,137 @@ object EventTableSink {
     out.toSeq
   }
 
-  /** Record the `_keys` of a live dir this call does not rewrite: a
-    * `.tmp-keys-` file in the bucket dir (torn debris for [[repair]]),
-    * then a fence check and an atomic rename into the dir.
+  // ---- the commit protocol -------------------------------------------------
+
+  /** A staged mutation, `.tmp-<id>` at the table root: its new
+    * `bucket=B/epoch=E` dirs, the `_keys` of the dirs it indexes in place
+    * and its manifest. `widen` holds the root files (`_schema`,
+    * `_compaction`) to rewrite before the commit.
     */
-  private def recordKeys(path: String, b: Int, e: Int,
-      entries: Seq[(String, Version)], writer: Option[Writer]): Unit = {
-    val tmp = bucketDir(path, b).resolve(s".tmp-keys-${System.nanoTime()}")
+  private[graft] final case class Staged(id: String, widen: Seq[(String, String)])
+
+  /** A manifest op on the dir `bucket=b/epoch=e`: [[Replace]] it with the
+    * staged dir, [[Drop]] it, or [[Index]] it with the staged `_keys`.
+    */
+  private final case class Op(kind: String, b: Int, e: Int)
+  private val Replace = "replace"
+  private val Drop = "drop"
+  private val Index = "index"
+  private val Manifest = "_manifest"
+  /** Where a txn keeps the live dirs it replaced or dropped. */
+  private val Spent = "_spent"
+
+  private def relDir(b: Int, e: Int): String = s"$BucketCol=$b/$EpochCol=$e"
+
+  /** Build a staging dir with `body`, which returns the ops and the root
+    * files to widen, then write the manifest; None when there is no op.
+    * A failure deletes the dir.
+    */
+  private def stage(path: String)(
+      body: Path => (Seq[Op], Seq[(String, String)])): Option[Staged] = {
+    val id = System.nanoTime().toString
+    val tmp = Paths.get(path).resolve(s".tmp-$id")
     try {
-      writeKeys(tmp, entries)
-      fenceCheck(path, writer)
-      Files.move(tmp, keysFile(path, b, e), StandardCopyOption.ATOMIC_MOVE)
-    } catch { case t: Throwable => Files.deleteIfExists(tmp); throw t }
+      val (ops, widen) = body(tmp)
+      if (ops.isEmpty) None
+      else {
+        Files.createDirectories(tmp)
+        Files.writeString(tmp.resolve(Manifest),
+          ops.map(o => s"${o.kind} ${o.b} ${o.e}").mkString("\n"))
+        Some(Staged(id, widen))
+      }
+    } catch { case t: Throwable => deleteRecursively(tmp); throw t }
   }
 
-  /** Swap each affected pair's staged dir into place (or drop the live
-    * dir when the merge emptied it), re-verifying the writer fence before
-    * every swap. Cleans the staging dir up on completion or fence abort.
+  /** Write `df` into the staging dir `tmp`, one `bucket=B/epoch=E` dir
+    * per pair. Clustered by `(bucket, epoch)` first, so one task owns each
+    * dir and writes a few contiguous files, not (tasks × dirs) fragments;
+    * sorted by key within each dir, so parquet min/max stats are tight and
+    * a point lookup prunes row groups inside the dir.
     */
-  private def swapPairs(path: String, affected: Seq[(Int, Int)], tmp: Path,
-      writer: Option[Writer]): Unit = {
+  private def writeStaged(df: DataFrame, tmp: Path): Unit =
+    df.repartition(col(BucketCol), col(EpochCol))
+      .sortWithinPartitions(Seq(col(BucketCol), col(EpochCol)) ++ keyCols.map(col): _*)
+      .write.partitionBy(BucketCol, EpochCol).mode(SaveMode.Overwrite)
+      .parquet(tmp.toString)
+
+  /** Commit a staged mutation: check the fence, widen its root files
+    * (a crash after this leaves them wider than the files, never files a
+    * reader cannot see), check the fence again and rename `.tmp-<id>` to
+    * `.txn-<id>`. Returns the txn dir; a failure deletes the staging dir.
+    */
+  private[graft] def commit(path: String, s: Staged, writer: Option[Writer]): Path = {
+    val root = Paths.get(path)
+    val tmp = root.resolve(s".tmp-${s.id}")
     try {
-      affected.foreach { case (b, e) =>
-        fenceCheck(path, writer) // re-verify per swap: one-rename window
-        val live = pairDir(path, b, e)
-        val staged = stagedDir(tmp, b, e)
-        val old = oldDir(path, b, e)
-        if (Files.exists(staged)) {
-          Files.createDirectories(bucketDir(path, b))
-          deleteRecursively(old)
-          if (Files.exists(live))
-            Files.move(live, old, StandardCopyOption.REPLACE_EXISTING)
-          Files.move(staged, live)
-          deleteRecursively(old)
-        } else if (Files.exists(live)) {
-          // merge emptied this epoch (all its rows superseded): one-way
-          // tombstone rename, then delete — repair finishes, never undoes
-          dropDir(path, live)
-        }
+      if (s.widen.nonEmpty) {
+        fenceCheck(path, writer)
+        s.widen.foreach { case (name, content) => writeRootFile(path, name, content) }
       }
-    } catch { case e: Throwable => deleteRecursively(tmp); throw e }
-    deleteRecursively(tmp)
-    dropEmptyBuckets(path)
+      fenceCheck(path, writer)
+      Files.move(tmp, root.resolve(s".txn-${s.id}"), StandardCopyOption.ATOMIC_MOVE)
+    } catch { case t: Throwable => deleteRecursively(tmp); throw t }
   }
+
+  /** The renames still due to apply the txn `txn`, in order — a pure
+    * function of its manifest and the files it names. A replaced or
+    * dropped live dir moves into the txn's `_spent`, then the staged dir
+    * or `_keys` file moves into place; an applied op has none left.
+    */
+  private[graft] def moves(root: Path, txn: Path): Seq[(Path, Path)] =
+    Files.readString(txn.resolve(Manifest)).split("\n").toSeq.flatMap { line =>
+      val Array(kind, b, e) = line.split(" ")
+      val rel = relDir(b.toInt, e.toInt)
+      val (live, staged) = (root.resolve(rel), txn.resolve(rel))
+      val spent = txn.resolve(Spent).resolve(rel)
+      kind match {
+        case Replace if Files.exists(staged) =>
+          (if (Files.exists(live)) Seq(live -> spent) else Nil) :+ (staged -> live)
+        case Drop if Files.exists(live) => Seq(live -> spent)
+        case Index if Files.exists(staged.resolve(KeysFile)) && Files.exists(live) =>
+          Seq(staged.resolve(KeysFile) -> live.resolve(KeysFile))
+        case _ => Nil
+      }
+    }
+
+  /** One of [[moves]]: a rename that fails rather than replace a target. */
+  private[graft] def move(m: (Path, Path)): Unit = {
+    Files.createDirectories(m._2.getParent)
+    Files.move(m._1, m._2)
+  }
+
+  /** Apply a committed txn's remaining [[moves]], delete the bucket dirs
+    * its drops emptied, then retire it: rename it back to `.tmp-<id>` and
+    * delete that. Idempotent from any point it was interrupted at.
+    */
+  private[graft] def finish(root: Path, txn: Path): Unit = {
+    moves(root, txn).foreach(move)
+    val spent = txn.resolve(Spent)
+    if (Files.exists(spent)) list(spent).map(b => root.resolve(b.getFileName.toString))
+      .foreach(b => if (Files.exists(b) && list(b).isEmpty) Files.delete(b))
+    val done = root.resolve(".tmp-" + txn.getFileName.toString.stripPrefix(".txn-"))
+    Files.move(txn, done, StandardCopyOption.ATOMIC_MOVE)
+    deleteRecursively(done)
+  }
+
+  /** Commit and finish a staged mutation, if there is one. */
+  private def run(path: String, s: Option[Staged], writer: Option[Writer]): Unit =
+    s.foreach(s => finish(Paths.get(path), commit(path, s, writer)))
 
   /** Epoch-compaction span metadata: the max `groupEpochs` ever applied
     * to this table (1 = never compacted). The stored-table
     * [[changesBetween]] reads it to widen its lower partition bound —
     * a compacted dir is labeled with its GROUP-MIN epoch, so rows of
-    * epoch E can live in a dir labeled as low as `E − (span−1)`.
+    * epoch E can live in a dir labeled as low as `E − (span−1)`. An
+    * unparseable file fails the read: taking it as 1 would prune
+    * compacted dirs away and silently return fewer rows.
     */
-  private def compactionFile(path: String): Path =
-    Paths.get(path).resolve("_compaction")
-
   def compactionSpan(path: String): Int = {
-    val f = compactionFile(path)
-    if (Files.exists(f))
-      Try(Files.readString(f).trim.toInt).getOrElse(1).max(1)
-    else 1
+    val f = Paths.get(path).resolve("_compaction")
+    if (!Files.exists(f)) 1
+    else Files.readString(f).trim.toIntOption.filter(_ >= 1).getOrElse(
+      throw new IllegalStateException(s"unparseable _compaction span at $path"))
   }
-
-  private val SourcesManifest = "_sources"
 
   /** Epoch compaction — the OPTIMIZE half of the pg_partman analogy. An
     * append-mostly stream leaves one narrow epoch dir per `epochWidth`
@@ -610,15 +679,13 @@ object EventTableSink {
     * [[changesBetween]], [[stateAsOf]], [[lookup]] and [[retention]] are
     * all unchanged (they are row-predicate-driven; epoch labels only
     * prune). Partition pruning stays EXACT via the `_compaction` span
-    * bound, written BEFORE any dir moves.
+    * bound, widened BEFORE the commit.
     *
-    * Crash safety (a different shape from the upsert swap, which is
-    * 1-dir-in-place; this is N dirs → 1): the combined dir is staged as
-    * `.cmt-epoch=L` carrying a `_sources` manifest of the dirs it
-    * replaces, then the finish routine drops each source one-way and
-    * promotes the staged dir. [[repair]] re-runs the same finish for any
-    * `.cmt-` it finds, so every crash point converges forward to the
-    * compacted state — never duplicated, never lost.
+    * One commit (see the header) replaces each group's label dir with
+    * the combined dir and drops its other sources, so every crash point
+    * leaves either the table before or after the compaction — never
+    * duplicated rows, never lost ones. With a `writer` handle, the epoch
+    * is checked on entry, before the span widening and before the commit.
     *
     * Returns the number of directories eliminated.
     */
@@ -628,8 +695,18 @@ object EventTableSink {
       s"groupEpochs must be in [2, 2^20]: $groupEpochs")
     fenceCheck(path, writer)
     repair(path)
+    val (eliminated, staged) = stageCompact(spark, path, uptoEpoch, groupEpochs)
+    run(path, staged, writer)
+    eliminated
+  }
+
+  /** The staging step of [[compact]]: the dirs it eliminates and the
+    * staged combined dirs.
+    */
+  private[graft] def stageCompact(spark: SparkSession, path: String, uptoEpoch: Int,
+      groupEpochs: Int): (Int, Option[Staged]) = {
     val root = Paths.get(path)
-    if (!Files.exists(root)) return 0
+    if (!Files.exists(root)) return (0, None)
     // driver-side dir listing (bounded by live dir count): cold epochs
     // grouped to their floor boundary; only multi-dir groups move
     val groups: Seq[(Int, Int, Seq[Int])] = bucketDirs(root)
@@ -640,59 +717,23 @@ object EventTableSink {
           case (label, srcs) if srcs.size >= 2 => (b, label, srcs.sorted)
         }
       }
-    if (groups.isEmpty) return 0
-    // widen the span BEFORE any mutation: a reader racing (or resuming
-    // after) a crash must already use the conservative bound
-    val span = math.max(compactionSpan(path), groupEpochs)
-    Files.writeString(compactionFile(path), span.toString)
-
+    if (groups.isEmpty) return (0, None)
     val srcDirs = groups.flatMap { case (b, _, es) =>
       es.map(e => pairDir(path, b, e).toString) }
-    val combined = scanTable(spark, path, srcDirs)
-      .withColumn(EpochCol,
-        (col(EpochCol) - pmod(col(EpochCol), lit(groupEpochs))).cast("int"))
-    val tmp = root.resolve(s".tmp-${System.nanoTime()}")
-    combined.repartition(col(BucketCol), col(EpochCol))
-      .sortWithinPartitions(
-        Seq(col(BucketCol), col(EpochCol)) ++ keyCols.map(col): _*)
-      .write.partitionBy(BucketCol, EpochCol).mode(SaveMode.Overwrite)
-      .parquet(tmp.toString)
-    groups.foreach { case (b, label, srcs) =>
-      fenceCheck(path, writer)
-      val staged = stagedDir(tmp, b, label)
-      if (Files.exists(staged)) {
+    (groups.map { case (_, _, srcs) => srcs.size - 1 }.sum, stage(path) { tmp =>
+      writeStaged(scanTable(spark, path, srcDirs).withColumn(EpochCol,
+        (col(EpochCol) - pmod(col(EpochCol), lit(groupEpochs))).cast("int")), tmp)
+      val ops = groups.flatMap { case (b, label, srcs) =>
         // the combined dir holds exactly its sources' rows, so its
         // `_keys` is their union when every source has one
-        if (srcs.forall(e => Files.exists(keysFile(path, b, e))))
+        val staged = tmp.resolve(relDir(b, label))
+        if (Files.exists(staged) && srcs.forall(e => Files.exists(keysFile(path, b, e))))
           writeKeys(staged.resolve(KeysFile), srcs.flatMap(keysOf(path, b, _)))
-        // manifest written while still UNDER .tmp- (crash here = clean
-        // rollback); the rename makes staging + manifest visible as one
-        Files.writeString(staged.resolve(SourcesManifest),
-          srcs.map(e => s"$EpochCol=$e").mkString("\n"))
-        val cmt = bucketDir(path, b).resolve(s".cmt-$EpochCol=$label")
-        deleteRecursively(cmt)
-        Files.move(staged, cmt)
-        finishCompaction(bucketDir(path, b), cmt)
+        Op(Replace, b, label) +: srcs.filter(_ != label).map(Op(Drop, b, _))
       }
-    }
-    deleteRecursively(tmp)
-    groups.map { case (_, _, srcs) => srcs.size - 1 }.sum
-  }
-
-  /** Finish (or, from [[repair]], re-finish after a crash) one staged
-    * compaction: drop every manifest-listed source dir one-way, then
-    * promote the staged dir to live. Idempotent from any interruption
-    * point — already-dropped sources no-op, and the promote happens
-    * exactly once.
-    */
-  private def finishCompaction(bdir: Path, cmt: Path): Unit = {
-    val manifest = cmt.resolve(SourcesManifest)
-    if (!Files.exists(manifest)) { deleteRecursively(cmt); return }
-    Files.readString(manifest).split("\n").filter(_.nonEmpty)
-      .foreach(n => dropDir(bdir.toString, bdir.resolve(n)))
-    val live = bdir.resolve(cmt.getFileName.toString.stripPrefix(".cmt-"))
-    if (!Files.exists(live)) Files.move(cmt, live)
-    else deleteRecursively(cmt) // promote already done by a prior finish
+      val span = compactionSpan(path)
+      (ops, if (groupEpochs > span) Seq("_compaction" -> groupEpochs.toString) else Nil)
+    })
   }
 
   /** Retention: evict rows whose `tsCol` is before `cutoff` — the
@@ -707,18 +748,31 @@ object EventTableSink {
     * classifies each candidate epoch dir. Fully-expired dirs are
     * DROPPED outright — no read, no rewrite, O(1) data I/O each — and
     * only boundary dirs (mixed expired/live rows; with monotone commit
-    * ts, one per bucket) are rewritten through the staged-write swap.
-    * Total cost ∝ expired rows + boundary dirs, NOT table size (probe
-    * included — dirs with no expired rows are never read or touched).
-    * Returns the number of rows evicted.
+    * ts, one per bucket) are rewritten. Both change in one commit (see
+    * the header), so a crash evicts all of the rows or none. Total cost
+    * ∝ expired rows + boundary dirs, NOT table size (probe included —
+    * dirs with no expired rows are never read or touched). With a
+    * `writer` handle, the epoch is checked on entry and before the
+    * commit. Returns the number of rows evicted; a table whose schema
+    * or files cannot be read fails, as [[read]] does.
     */
   def retention(spark: SparkSession, path: String, tsCol: String,
       cutoff: Column, writer: Option[Writer] = None): Long = {
     fenceCheck(path, writer)
     repair(path)
-    val target = Paths.get(path)
-    if (!Files.exists(target)) return 0L
-    val t = Try(scanTable(spark, path, Seq(path))).getOrElse(return 0L)
+    val (evicted, staged) = stageRetention(spark, path, tsCol, cutoff)
+    run(path, staged, writer)
+    evicted
+  }
+
+  /** The staging step of [[retention]]: the rows it evicts and the staged
+    * boundary rewrites.
+    */
+  private[graft] def stageRetention(spark: SparkSession, path: String, tsCol: String,
+      cutoff: Column): (Long, Option[Staged]) = {
+    // a table with no data dirs has nothing to evict
+    val data = tableSchema(spark, path).getOrElse(return (0L, None))
+    val t = scan(spark, path, data, Seq(path))
     // Expiry probe, pass 1 — find EXPIRED rows with the cutoff PUSHED
     // into the scan: parquet row-group ts stats skip fully-live epochs
     // wholesale (commit ts correlates with the lsn-derived epoch, so a
@@ -733,21 +787,17 @@ object EventTableSink {
       .collect()
       .map(r => (r.getInt(0), r.getInt(1)) -> r.getLong(2))
       .toMap
-    if (expiredByPair.isEmpty) return 0L
+    if (expiredByPair.isEmpty) return (0L, None)
     // Pass 2 — totals for CANDIDATE dirs only (the ones holding any
     // expired row): dirs with zero expired rows are never read or
     // touched. Bounded: |candidates| ≤ expired rows.
-    val candDirs = expiredByPair.keys.toSeq.sorted
-      .map { case (b, e) => pairDir(path, b, e) }
-      .filter(Files.exists(_)).map(_.toString)
-    val totals =
-      if (candDirs.isEmpty) Map.empty[(Int, Int), Long]
-      else scanTable(spark, path, candDirs)
-        .groupBy(col(BucketCol), col(EpochCol))
-        .agg(count(lit(1)).as("total"))
-        .collect()
-        .map(r => (r.getInt(0), r.getInt(1)) -> r.getLong(2))
-        .toMap
+    val totals = scan(spark, path, data, expiredByPair.keys.toSeq.sorted
+        .map { case (b, e) => pairDir(path, b, e).toString })
+      .groupBy(col(BucketCol), col(EpochCol))
+      .agg(count(lit(1)).as("total"))
+      .collect()
+      .map(r => (r.getInt(0), r.getInt(1)) -> r.getLong(2))
+      .toMap
     val stats = expiredByPair.map { case (pair, expired) =>
       pair -> ((totals.getOrElse(pair, expired), expired))
     }
@@ -760,28 +810,14 @@ object EventTableSink {
     val boundary = stats.toSeq.collect {
       case (pair, (total, expired)) if expired > 0 && expired < total => pair
     }.sorted
-    val evicted = stats.values.map(_._2).sum
-    if (evicted == 0) return 0L
-
-    // pg_partman path: drop whole expired epoch dirs, no data I/O
-    fullDrop.foreach { case (b, e) =>
-      fenceCheck(path, writer)
-      dropDir(path, pairDir(path, b, e))
-    }
-
-    if (boundary.nonEmpty) {
-      val dirs = boundary.map { case (b, e) => pairDir(path, b, e).toString }
-      val keep = scanTable(spark, path, dirs)
-        .filter(col(tsCol) >= cutoff || col(tsCol).isNull)
-      val tmp = target.resolve(s".tmp-${System.nanoTime()}")
-      keep.repartition(col(BucketCol), col(EpochCol))
-        .sortWithinPartitions(
-          Seq(col(BucketCol), col(EpochCol)) ++ keyCols.map(col): _*)
-        .write.partitionBy(BucketCol, EpochCol).mode(SaveMode.Overwrite)
-        .parquet(tmp.toString)
-      swapPairs(path, boundary, tmp, writer)
-    } else dropEmptyBuckets(path)
-    evicted
+    (stats.values.map(_._2).sum, stage(path) { tmp =>
+      // pg_partman path: whole expired epoch dirs drop with no data I/O
+      if (boundary.nonEmpty)
+        writeStaged(scan(spark, path, data, boundary.map { case (b, e) => pairDir(path, b, e).toString })
+          .filter(col(tsCol) >= cutoff || col(tsCol).isNull), tmp)
+      (fullDrop.map { case (b, e) => Op(Drop, b, e) } ++
+        boundary.map { case (b, e) => Op(Replace, b, e) }, Nil)
+    })
   }
 
   /** Change feed between two cursors: the NET effect per record_pk of
@@ -884,43 +920,13 @@ object EventTableSink {
     Paths.get(path).resolve(s"$BucketCol=$b")
 
   private def pairDir(path: String, b: Int, e: Int): Path =
-    bucketDir(path, b).resolve(s"$EpochCol=$e")
-
-  /** A `(bucket, epoch)` dir inside the staging dir `tmp` of a write. */
-  private def stagedDir(tmp: Path, b: Int, e: Int): Path =
-    tmp.resolve(s"$BucketCol=$b").resolve(s"$EpochCol=$e")
+    Paths.get(path).resolve(relDir(b, e))
 
   /** The live epochs of the bucket dir `bdir` (none if it is absent). */
   private def epochsOf(bdir: Path): Seq[Int] =
     if (!Files.exists(bdir)) Nil
     else list(bdir).map(_.getFileName.toString)
       .filter(_.startsWith(s"$EpochCol=")).map(_.stripPrefix(s"$EpochCol=").toInt)
-
-  // dot-prefixed → invisible to Spark's partition discovery
-  private def oldDir(path: String, b: Int, e: Int): Path =
-    bucketDir(path, b).resolve(s".old-$EpochCol=$e")
-
-  /** One-way crash-safe delete: tombstone rename (`.del-`, invisible to
-    * Spark) then recursive delete. [[repair]] finishes interrupted drops
-    * — `.del-` is never restored, unlike `.old-` backups.
-    */
-  private def dropDir(path: String, live: Path): Unit = {
-    if (!Files.exists(live)) return
-    val tomb = live.getParent.resolve(s".del-${live.getFileName}")
-    deleteRecursively(tomb)
-    Files.move(live, tomb, StandardCopyOption.REPLACE_EXISTING)
-    deleteRecursively(tomb)
-  }
-
-  /** A bucket whose last epoch dir was dropped leaves an empty `bucket=B`
-    * shell; remove it so partition discovery never trips on a dir with no
-    * files (and a fully-expired table reads back as an empty dir listing).
-    */
-  private def dropEmptyBuckets(path: String): Unit = {
-    val root = Paths.get(path)
-    if (!Files.exists(root)) return
-    bucketDirs(root).foreach(b => if (list(b).isEmpty) Try(Files.delete(b)))
-  }
 
   private def list(p: Path): Seq[Path] = {
     import scala.jdk.CollectionConverters._
@@ -931,31 +937,18 @@ object EventTableSink {
   private def bucketDirs(root: Path): Seq[Path] = list(root).filter(p =>
     Files.isDirectory(p) && p.getFileName.toString.startsWith(s"$BucketCol="))
 
-  /** Roll back any dir left half-swapped by a crash (live dir missing,
-    * `.old-` backup present), finish any half-finished drop (`.del-`
-    * tombstones), and clear stale temp/backup dirs and torn `.tmp-keys-`
-    * files — at both the bucket and epoch level.
+  /** Bring the table to its last committed state with one listing of the
+    * root: delete every `.tmp-` (a mutation that never committed, a
+    * retired txn, a stranded root-file temp) and [[finish]] every `.txn-`
+    * (a committed mutation, rolled forward).
     */
   def repair(path: String): Unit = {
     val root = Paths.get(path)
-    if (!Files.exists(root)) return
-    def heal(dir: Path, prefix: String): Unit =
-      list(dir).foreach { p =>
-        val name = p.getFileName.toString
-        if (name.startsWith(s".old-$prefix=")) {
-          val live = dir.resolve(name.stripPrefix(".old-"))
-          if (!Files.exists(live)) Files.move(p, live)
-          else deleteRecursively(p)
-        } else if (name.startsWith(s".cmt-$prefix=")) {
-          // a compaction crashed between staging and finish: the staged
-          // dir + manifest carry everything needed to converge FORWARD
-          finishCompaction(dir, p)
-        } else if (name.startsWith(".del-")) deleteRecursively(p)
-        else if (name.startsWith(".tmp-")) deleteRecursively(p)
-      }
-    heal(root, BucketCol) // legacy flat layout + root-level debris
-    bucketDirs(root).foreach(heal(_, EpochCol))
-    dropEmptyBuckets(path)
+    if (Files.exists(root)) list(root).foreach { p =>
+      val name = p.getFileName.toString
+      if (name.startsWith(".tmp-")) deleteRecursively(p)
+      else if (name.startsWith(".txn-")) finish(root, p)
+    }
   }
 
   private def deleteRecursively(p: Path): Unit = {

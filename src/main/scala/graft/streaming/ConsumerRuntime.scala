@@ -64,11 +64,11 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * (`maxSegmentsPerBatch` / `maxOffsetsPerTrigger` — the contract every
   * structured-streaming sink shares); the ledger is ≤ max_ack_pending
   * entries by construction. Measured end to end (WAL segments → decode →
-  * pipeline → live loopback transport, the path `perfbench/`'s
-  * `cdc_drain` and `cdc_paced` workloads drive, with the streaming query
-  * on a [[graft.sources.PgStream.streamingSession]] clone): 71k
-  * delivered events/s grouped, 75k ungrouped at 500k-event batches —
-  * past the reference's published 50k ops/s single-node peak.
+  * pipeline → live loopback transport, with the streaming query on a
+  * [[graft.sources.PgStream.streamingSession]] clone) by
+  * `python3 perfbench/run.py --workload cdc_drain --seconds 8`: 3.1–3.4k
+  * delivered events/s at 4,000-event rounds (median over timed rounds),
+  * well below the reference's published 50k ops/s single-node peak.
   */
 object ConsumerRuntime {
 

@@ -312,6 +312,146 @@ class EventTableSinkSpec extends SparkSpec {
     assertKeysExact(dir, "legacy replay", indexed = true)
   }
 
+  // ---- crash points of the commit protocol ---------------------------------
+
+  /** A copy of the table at `src` in a new dir, hidden names included. */
+  private def copyTable(src: String, tag: String): String = {
+    val (from, to) = (Paths.get(src), Paths.get(tmpTable(tag)))
+    val all = { val s = Files.walk(from); try s.iterator().asScala.toList finally s.close() }
+    all.foreach { p =>
+      val t = to.resolve(from.relativize(p).toString)
+      if (Files.isDirectory(p)) Files.createDirectories(t) else Files.copy(p, t)
+    }
+    to.toString
+  }
+
+  /** What a reader sees of a one-bucket table: its live dirs, `read`,
+    * `changesBetween` over each window and `lookup` of each pk.
+    */
+  private def readerView(dir: String, pks: Seq[String],
+      windows: Seq[(Long, Long)]): (Set[String], Seq[Set[Rec]]) =
+    (dirKeys(dir).keySet, EventTableSink.read(spark, dir).collect().map(rec).toSet +:
+      (windows.map { case (from, to) =>
+        EventTableSink.changesBetween(spark, dir, from, to, EpochWidth).collect().map(rec).toSet
+      } ++ pks.map(pk => EventTableSink.lookup(spark, dir, pk, 1).collect().map(rec).toSet)))
+
+  /** Stage a mutation once on a copy of the table at `dir`, then stop its
+    * protocol at every step, each on a fresh copy of the staged table:
+    * partial staging (no manifest yet), fully staged, committed, and after
+    * each rename of the finish — the last stop is finished but not cleaned
+    * up. `raw` sees each rename stop before `repair`. After `repair`, every
+    * stop before the commit must read as the table before the mutation,
+    * every later one as the table after it, whose `read` is `want`; every
+    * live `_keys` is exact and no `.tmp-` or `.txn-` is left. Returns the
+    * number of renames.
+    */
+  private def checkCrashPoints(dir: String, pks: Seq[String], windows: Seq[(Long, Long)],
+      want: Set[Rec], raw: (Int, String) => Unit = (_, _) => ())(
+      stage: String => Option[EventTableSink.Staged]): Int = {
+    val pre = readerView(dir, pks, windows)
+    val staged = copyTable(dir, "staged")
+    val s = stage(staged).get
+    def commit(d: String): Path = EventTableSink.commit(d, s, None)
+    def at(name: String)(steps: String => Unit): (Set[String], Seq[Set[Rec]]) = {
+      val d = copyTable(staged, "stop")
+      steps(d)
+      EventTableSink.repair(d)
+      val left = { val l = Files.list(Paths.get(d)); try l.iterator().asScala.toList finally l.close() }
+        .map(_.getFileName.toString).filter(n => n.startsWith(".tmp-") || n.startsWith(".txn-"))
+      assert(left.isEmpty, s"$name: left $left")
+      assertKeysExact(d, name, indexed = false)
+      readerView(d, pks, windows)
+    }
+    val post = at("finished")(d => EventTableSink.finish(Paths.get(d), commit(d)))
+    assert(post._2.head == want, s"finished: read ${post._2.head}, want $want")
+    assert(post != pre, "the mutation changed nothing")
+    assert(at("partial staging")(d => Files.delete(Paths.get(d, s".tmp-${s.id}", "_manifest"))) == pre)
+    assert(at("fully staged")(_ => ()) == pre)
+    assert(at("committed")(commit(_)) == post)
+    val renames = { val d = copyTable(staged, "renames"); EventTableSink.moves(Paths.get(d), commit(d)).size }
+    (1 to renames).foreach { k =>
+      assert(at(s"$k of $renames renames") { d =>
+        EventTableSink.moves(Paths.get(d), commit(d)).take(k).foreach(EventTableSink.move)
+        raw(k, d)
+      } == post, s"$k of $renames renames")
+    }
+    renames
+  }
+
+  private def recs(pks: Range, lsn: Int => Long): Seq[Rec] = {
+    val rnd = new scala.util.Random(20261020L)
+    pks.map(i => Rec(s"p$i", lsn(i), 0L, "insert", rnd.nextInt(1000).toLong, None))
+  }
+
+  test("crash points of an upsert: a winner moving to a later epoch, a new epoch " +
+      "and an unindexed dir, all or nothing after repair") {
+    val dir = tmpTable("crash_upsert")
+    // epoch 0: p0-p2, epoch 1: p3-p5, epoch 2: p6-p8 — one bucket
+    val table = recs(0 to 8, i => 8L + 64L * (i / 3) + i)
+    EventTableSink.upsert(spark, frame(table), dir, 1, EpochWidth)
+    Files.delete(Paths.get(dir, "bucket=0", "epoch=0", "_keys"))
+    // p3 moves from epoch 1 to epoch 2, p9 opens epoch 3, p4's row is stale
+    val batch = Seq(Rec("p3", 160L, 0L, "update", -3L, None),
+      Rec("p9", 200L, 0L, "insert", 9L, None), Rec("p4", 70L, 0L, "update", -4L, None))
+    val want = table.filterNot(_.pk == "p3").toSet ++ batch.take(2)
+    val renames = checkCrashPoints(dir, Seq("p3", "p0"), Seq((64L, 159L)),
+      want, raw = (k, d) => if (k == 2) {
+        // epoch 1 is replaced, epoch 2 not yet: p3 is in no live dir
+        assert(spark.read.parquet(d).filter(col("record_pk") === "p3").isEmpty)
+      }) { d =>
+      EventTableSink.stageUpsert(spark, frame(batch), d, 1, EpochWidth)
+    }
+    // replace epochs 1 and 2 (two renames each), add epoch 3, index epoch 0
+    assert(renames == 6)
+  }
+
+  test("crash points of a retention with one full drop and one boundary " +
+      "rewrite: all or nothing after repair") {
+    val dir = tmpTable("crash_retention")
+    // lsn 0..132: epoch 0 expires whole, epoch 1 in part, epoch 2 not at all
+    val table = recs(0 to 11, i => 12L * i)
+    EventTableSink.upsert(spark, frame(table), dir, 1, EpochWidth)
+    val renames = checkCrashPoints(dir, Seq("p0", "p7"), Seq((50L, 110L)),
+      table.filter(_.lsn >= 100L).toSet) { d =>
+      EventTableSink.stageRetention(spark, d, "commit_lsn", lit(100L))._2
+    }
+    assert(renames == 3)
+  }
+
+  test("crash points of a compact of three epochs: all or nothing after repair") {
+    val dir = tmpTable("crash_compact")
+    // epochs 0, 1 and 2 compact into one dir labeled 0; epoch 3 stays
+    val table = recs(0 to 7, i => 20L * i + 4) :+ Rec("p8", 200L, 0L, "insert", 8L, None)
+    EventTableSink.upsert(spark, frame(table), dir, 1, EpochWidth)
+    val renames = checkCrashPoints(dir, Seq("p4"), Seq((70L, 130L)),
+      table.toSet) { d =>
+      EventTableSink.stageCompact(spark, d, uptoEpoch = 2, groupEpochs = 4)._2
+    }
+    assert(renames == 4)
+  }
+
+  test("retention fails on an unparseable _schema instead of evicting nothing") {
+    val dir = tmpTable("bad_schema")
+    EventTableSink.upsert(spark, v1(1 to 10, 8L), dir, Buckets, EpochWidth)
+    Files.writeString(Paths.get(dir, "_schema"), "{ torn")
+    intercept[Exception](EventTableSink.read(spark, dir))
+    intercept[Exception](EventTableSink.retention(spark, dir, "commit_lsn", lit(100L)))
+  }
+
+  test("changesBetween fails on an unparseable _compaction instead of " +
+      "returning fewer rows") {
+    val dir = tmpTable("bad_span")
+    EventTableSink.upsert(spark, frame(recs(0 to 7, i => 20L * i + 4)), dir, 1, EpochWidth)
+    assert(EventTableSink.compact(spark, dir, uptoEpoch = 2, groupEpochs = 4) > 0)
+    assert(EventTableSink.changesBetween(spark, dir, 70L, 130L, EpochWidth).count() == 3)
+    Seq("", "not a span", "0").foreach { torn =>
+      Files.writeString(Paths.get(dir, "_compaction"), torn)
+      val e = intercept[IllegalStateException](
+        EventTableSink.changesBetween(spark, dir, 70L, 130L, EpochWidth))
+      assert(e.getMessage.contains("_compaction"), e.getMessage)
+    }
+  }
+
   test("an upsert whose record_pk is not a string fails on entry and writes nothing") {
     val dir = tmpTable("intpk")
     import spark.implicits._

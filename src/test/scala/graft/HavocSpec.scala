@@ -7,7 +7,7 @@ import graft.sources.{PgStream, WalSpool, WalSpoolMicroBatchStream, WalSpoolOffs
 import graft.streaming.ConsumerRuntime
 import java.net.{InetAddress, ServerSocket}
 import java.nio.charset.StandardCharsets.UTF_8
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths}
 import java.sql.Timestamp
 import java.util.concurrent.ConcurrentLinkedQueue
 import org.apache.spark.sql.SaveMode
@@ -23,6 +23,8 @@ import org.apache.spark.sql.functions._
   * compaction staging and promote, truncated checkpoint, fenced writer —
   * and asserts the corresponding invariant: exactly-once delivery,
   * loud failure (never silent loss), forward convergence of repair.
+  * Every crash point of each event-table mutation is enumerated in
+  * EventTableSinkSpec.
   */
 class HavocSpec extends SparkSpec {
 
@@ -90,18 +92,6 @@ class HavocSpec extends SparkSpec {
   /** listSegments returns hadoop `file:` URIs — back to a local Path. */
   private def localPath(hadoop: String): Path =
     Paths.get(hadoop.stripPrefix("file:"))
-
-  private def copyTree(src: Path, dst: Path): Unit = {
-    import scala.jdk.CollectionConverters._
-    val s = Files.walk(src)
-    val all = try s.iterator().asScala.toSeq finally s.close()
-    all.foreach { p =>
-      val t = dst.resolve(src.relativize(p).toString)
-      if (Files.isDirectory(p)) Files.createDirectories(t)
-      else { Files.createDirectories(t.getParent)
-        Files.copy(p, t, StandardCopyOption.REPLACE_EXISTING); () }
-    }
-  }
 
   // ---- 1. transport killed mid-stream, revived on the same port --------
 
@@ -234,14 +224,17 @@ class HavocSpec extends SparkSpec {
 
   test("havoc: crash between .cmt- staging and promote — repair converges " +
       "forward from every interruption point") {
+    // a compaction stages its combined dir under `.tmp-<id>`, commits by
+    // renaming that to `.txn-<id>` and promotes through the txn's renames
     implicit val s = spark
     import s.implicits._
     def rows(path: String) = EventTableSink.read(spark, path)
       .select("record_pk", "commit_lsn", "v").collect()
       .map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSet
+    def rowCount(path: String) = EventTableSink.read(spark, path).count()
     def mkTable(): String = {
       val path = tmpDir("hv_cmt")
-      // two narrow epochs in one bucket (numBuckets=1 keeps it focused)
+      // three narrow epochs in one bucket (numBuckets=1 keeps it focused)
       EventTableSink.upsert(spark,
         Seq(("a", 10L, 0L, 1.0), ("b", 20L, 0L, 2.0))
           .toDF("record_pk", "commit_lsn", "commit_idx", "v"),
@@ -251,7 +244,21 @@ class HavocSpec extends SparkSpec {
         path, numBuckets = 1, epochWidth = 16L)
       path
     }
-    def rowCount(path: String) = EventTableSink.read(spark, path).count()
+    def epochDirs(path: String): Seq[String] = {
+      import scala.jdk.CollectionConverters._
+      val l = Files.list(Paths.get(path).resolve("bucket=0"))
+      try l.iterator().asScala.map(_.getFileName.toString).toSeq.sorted
+      finally l.close()
+    }
+    def debris(path: String): Seq[String] = {
+      import scala.jdk.CollectionConverters._
+      val l = Files.list(Paths.get(path))
+      try l.iterator().asScala.map(_.getFileName.toString)
+        .filter(n => n.startsWith(".tmp-") || n.startsWith(".txn-")).toSeq
+      finally l.close()
+    }
+    def staged(path: String): EventTableSink.Staged =
+      EventTableSink.stageCompact(spark, path, uptoEpoch = 100, groupEpochs = 4)._2.get
     // ground truth: a completed compaction (epochs 0,1,2 → one dir: 2
     // directories eliminated)
     val done = mkTable()
@@ -259,49 +266,55 @@ class HavocSpec extends SparkSpec {
     assert(EventTableSink.compact(spark, done, uptoEpoch = 100,
       groupEpochs = 4) == 2)
     assert(rows(done) == before && rowCount(done) == 3)
-    val compactedDir = Paths.get(done).resolve("bucket=0").resolve("epoch=0")
-    assert(Files.exists(compactedDir))
+    assert(epochDirs(done) == Seq("epoch=0"))
 
-    // CRASH POINT A: staged .cmt- present, NO source dropped yet.
-    // Fabricate by planting the completed compaction's output (exactly
-    // what compact stages) as .cmt- on a fresh identical table.
+    // CRASH POINT A: staging torn before its manifest was written —
+    // repair must discard it and leave the three source dirs
     val crashA = mkTable()
-    val cmtA = Paths.get(crashA).resolve("bucket=0").resolve(".cmt-epoch=0")
-    copyTree(compactedDir, cmtA)
-    Files.writeString(cmtA.resolve("_sources"), "epoch=0\nepoch=1\nepoch=2")
+    val tornA = staged(crashA)
+    Files.delete(Paths.get(crashA).resolve(s".tmp-${tornA.id}").resolve("_manifest"))
     EventTableSink.repair(crashA)
     assert(rows(crashA) == before && rowCount(crashA) == 3,
-      "crash-before-drops did not converge")
-    assert(!Files.exists(Paths.get(crashA).resolve("bucket=0")
-      .resolve("epoch=2")), "source dir not dropped by repair")
+      "manifest-less staging corrupted the table")
+    assert(epochDirs(crashA) == Seq("epoch=0", "epoch=1", "epoch=2"))
+    assert(debris(crashA).isEmpty, s"staging debris survived repair: ${debris(crashA)}")
 
-    // CRASH POINT B: one source already dropped, promote not yet done
+    // CRASH POINT B: fully staged, never committed — rolls back, and the
+    // re-run converges
     val crashB = mkTable()
-    val cmtB = Paths.get(crashB).resolve("bucket=0").resolve(".cmt-epoch=0")
-    copyTree(compactedDir, cmtB)
-    Files.writeString(cmtB.resolve("_sources"), "epoch=0\nepoch=1\nepoch=2")
-    // the crash had already dropped epoch=0 (repair must not resurrect it)
-    def deleteRec(p: Path): Unit = {
-      import scala.jdk.CollectionConverters._
-      val st = Files.walk(p)
-      val all = try st.iterator().asScala.toSeq finally st.close()
-      all.reverse.foreach(f => Files.deleteIfExists(f))
-    }
-    deleteRec(Paths.get(crashB).resolve("bucket=0").resolve("epoch=0"))
+    staged(crashB)
     EventTableSink.repair(crashB)
     assert(rows(crashB) == before && rowCount(crashB) == 3,
-      "crash-mid-drops did not converge")
+      "crash-before-commit did not roll back")
+    assert(epochDirs(crashB) == Seq("epoch=0", "epoch=1", "epoch=2"))
+    assert(debris(crashB).isEmpty)
+    assert(EventTableSink.compact(spark, crashB, uptoEpoch = 100,
+      groupEpochs = 4) == 2)
+    assert(rows(crashB) == before && epochDirs(crashB) == Seq("epoch=0"))
 
-    // CRASH POINT C: .cmt- with NO manifest (crashed before the rename
-    // made staging+manifest visible as one) — repair must discard it
-    val crashC = mkTable()
-    val cmtC = Paths.get(crashC).resolve("bucket=0").resolve(".cmt-epoch=0")
-    copyTree(compactedDir, cmtC)
-    Files.deleteIfExists(cmtC.resolve("_sources"))
-    EventTableSink.repair(crashC)
-    assert(rows(crashC) == before && rowCount(crashC) == 3,
-      "manifest-less .cmt- corrupted the table")
-    assert(!Files.exists(cmtC), ".cmt- debris survived repair")
+    // CRASH POINT C: committed, then interrupted after the first `k`
+    // renames of the promote (k = 0: none yet; later ones with sources
+    // already dropped, which repair must not resurrect) — every one
+    // converges forward to the compacted table
+    def crashAfter(k: Int): (String, Int) = {
+      val path = mkTable()
+      val txn = EventTableSink.commit(path, staged(path), None)
+      val due = EventTableSink.moves(Paths.get(path), txn)
+      due.take(k).foreach(EventTableSink.move)
+      (path, due.size)
+    }
+    // label dir out, combined dir in, two sources dropped
+    val renames = crashAfter(0)._2
+    assert(renames == 4)
+    (0 until renames).foreach { k =>
+      val crashC = crashAfter(k)._1
+      EventTableSink.repair(crashC)
+      assert(rows(crashC) == before && rowCount(crashC) == 3,
+        s"crash after $k of $renames renames did not converge")
+      assert(epochDirs(crashC) == Seq("epoch=0"),
+        s"after $k renames: ${epochDirs(crashC)}")
+      assert(debris(crashC).isEmpty, s"after $k renames: ${debris(crashC)}")
+    }
   }
 
   // ---- 6. truncated checkpoint: loud failure, then idempotent resume ---
@@ -379,10 +392,12 @@ class HavocSpec extends SparkSpec {
         .toDF("record_pk", "commit_lsn", "commit_idx", "v"))
     }
     assert(e.getMessage.contains("fenced"))
-    // the zombie's write left nothing: no .tmp- staging, no zombie row
+    // the zombie's write left nothing: no .tmp- staging, no .txn-, no
+    // zombie row
     import scala.jdk.CollectionConverters._
     val leftovers = Files.list(Paths.get(path)).iterator().asScala
-      .filter(_.getFileName.toString.startsWith(".tmp-")).toSeq
+      .map(_.getFileName.toString)
+      .filter(n => n.startsWith(".tmp-") || n.startsWith(".txn-")).toSeq
     assert(leftovers.isEmpty, s"staging debris: $leftovers")
     val pks = EventTableSink.read(spark, path)
       .select("record_pk").collect().map(_.getString(0)).toSet

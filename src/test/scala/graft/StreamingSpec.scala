@@ -524,10 +524,10 @@ class StreamingSpec extends SparkSpec {
     } finally query.stop()
   }
 
-  test("EventTableSink.repair rolls back crash debris: half-swap, stale backup, torn temp") {
+  test("EventTableSink.repair deletes uncommitted debris: a torn staging dir, a stranded temp file, a _schema widened before the commit") {
     implicit val s = spark
     import s.implicits._
-    import java.nio.file.{Files, Paths, StandardCopyOption}
+    import java.nio.file.{Files, Paths}
     val dir = java.nio.file.Files.createTempDirectory("graft_sink_crash")
       .toString + "/events"
     val rows = (1 to 50).map(i => ev(8, i.toLong, "7", i.toString,
@@ -537,35 +537,27 @@ class StreamingSpec extends SparkSpec {
       .select("record_pk", "record_value").collect()
       .map(r => (r.getString(0), r.getDouble(1))).sortBy(_._1)
 
-    // crash state 1: a bucket half-swapped — live dir gone, backup present
-    val b0 = Paths.get(dir).resolve("bucket=0")
-    Files.move(b0, Paths.get(dir).resolve(".old-bucket=0"),
-      StandardCopyOption.REPLACE_EXISTING)
-    // crash state 2: a stale backup NEXT TO a live dir (crash after swap,
-    // before cleanup) — must be dropped, live wins
-    val b1 = Paths.get(dir).resolve("bucket=1")
-    val stale = Paths.get(dir).resolve(".old-bucket=1")
-    Files.createDirectories(stale)
-    Files.writeString(stale.resolve("junk.parquet"), "stale bytes")
-    // crash state 3: a torn temp dir from an aborted write
+    // crash state 3: a torn staging dir from an aborted write, and a
+    // root-file temp stranded before its rename
     val torn = Paths.get(dir).resolve(".tmp-12345")
     Files.createDirectories(torn)
     Files.writeString(torn.resolve("part-0.parquet"), "torn")
+    val strandedTemp = Paths.get(dir).resolve(".tmp-12346_schema")
+    Files.writeString(strandedTemp, "{")
 
     // read() runs repair first: table content must be exactly as before
     val healed = EventTableSink.read(spark, dir)
       .select("record_pk", "record_value").collect()
       .map(r => (r.getString(0), r.getDouble(1))).sortBy(_._1)
     assert(healed.sameElements(expect))
-    assert(Files.exists(b0) && Files.exists(b1))
-    assert(!Files.exists(stale) && !Files.exists(torn))
+    assert(!Files.exists(torn) && !Files.exists(strandedTemp))
 
     // and a replayed upsert after the crash still converges
     EventTableSink.upsert(spark, rows, dir, numBuckets = 4)
     assert(EventTableSink.read(spark, dir).count() == 50)
 
     // crash state 4: an upsert that adds a column died after widening
-    // `_schema` but before its swap — the recorded schema is wider than
+    // `_schema` but before its commit — the recorded schema is wider than
     // every file and the staged dir is left behind
     val widened = EventTableSink.tableSchema(spark, dir).get.add("added", "long")
     Files.writeString(Paths.get(dir).resolve("_schema"), widened.json)
@@ -588,39 +580,6 @@ class StreamingSpec extends SparkSpec {
       .map(r => (r.getString(0), r.getDouble(1))).sortBy(_._1).toSeq ==
       (1 to 5).map(i => (i.toString, 100.0 + i)).sortBy(_._1))
     assert(EventTableSink.tableSchema(spark, dir).contains(widened))
-
-    // crash state 5: an upsert died mid-swap with `_keys` in play — the
-    // live dir moved to its `.old-` backup (with its `_keys`), the staged
-    // dir (with the new `_keys`) still under `.tmp-`, and a torn
-    // `.tmp-keys-` file in a bucket dir from an in-place recording
-    def keysExact(): Unit = graft.EventTableSinkSpec.keyIndex(spark, dir).foreach {
-      case (d, (keys, stored)) => assert(keys.contains(stored), s"$d: _keys $keys, stored $stored")
-    }
-    keysExact()
-    val before = EventTableSink.read(spark, dir).collect().toSet
-    val live = Paths.get(dir).resolve("bucket=0/epoch=0")
-    Files.move(live, Paths.get(dir).resolve("bucket=0/.old-epoch=0"))
-    val staged5 = Paths.get(dir).resolve(".tmp-555/bucket=0/epoch=0")
-    Files.createDirectories(staged5)
-    Files.copy(Paths.get(dir).resolve("bucket=0/.old-epoch=0/_keys"), staged5.resolve("_keys"))
-    Files.writeString(staged5.resolve("part-0.parquet"), "torn")
-    val tornKeys = Paths.get(dir).resolve("bucket=1/.tmp-keys-777")
-    Files.writeString(tornKeys, "torn")
-    val healed5 = EventTableSink.read(spark, dir).collect().toSet
-    assert(healed5 == before)
-    assert(!Files.exists(tornKeys) && !Files.exists(Paths.get(dir).resolve(".tmp-555")))
-    keysExact()
-    // replaying the crashed batch (newer versions of pks 6..10) converges
-    val batch5 = (6 to 10).map(i => ev(24, i.toLong, "7", i.toString,
-      value = 200.0 + i)).toDF().withColumn("added", lit(8L))
-    EventTableSink.upsert(spark, batch5, dir, numBuckets = 4)
-    EventTableSink.upsert(spark, batch5, dir, numBuckets = 4)
-    val converged5 = EventTableSink.read(spark, dir)
-    assert(converged5.count() == 50)
-    assert(converged5.filter(col("added") === 8L).select("record_pk", "record_value")
-      .collect().map(r => (r.getString(0), r.getDouble(1))).sortBy(_._1).toSeq ==
-      (6 to 10).map(i => (i.toString, 200.0 + i)).sortBy(_._1))
-    keysExact()
   }
 
   test("EventTableSink.retention evicts old rows, drops fully-expired buckets, is idempotent and fenced") {
@@ -685,41 +644,6 @@ class StreamingSpec extends SparkSpec {
     val left = EventTableSink.read(spark, dir)
       .select("record_pk").collect().map(_.getString(0)).toSeq
     assert(left == Seq("2"), s"NULL-ts row dropped: $left")
-  }
-
-  test("EventTableSink.retention: a crash mid-swap rolls back and re-running converges") {
-    implicit val s = spark
-    import s.implicits._
-    import org.apache.spark.sql.functions.{lit, to_timestamp}
-    import java.nio.file.{Files => JF, Paths => JP}
-    val dir = JF.createTempDirectory("graft_sink_retcrash").toString + "/events"
-    val rows = (1 to 20).map { i =>
-      val t = if (i % 2 == 0) "2024-01-01 00:00:00" else "2024-02-01 00:00:00"
-      ev(8, i.toLong, "7", i.toString).copy(
-        commit_ts = java.sql.Timestamp.valueOf(t))
-    }
-    EventTableSink.upsert(spark, rows.toDF(), dir, numBuckets = 2)
-
-    // simulate a crash between the two renames of bucket 0's swap: live
-    // moved to .old-, staged never moved in, torn .tmp- left behind
-    val live = JP.get(dir, "bucket=0")
-    assert(JF.exists(live))
-    JF.move(live, JP.get(dir, ".old-bucket=0"))
-    JF.createDirectories(JP.get(dir, ".tmp-123/bucket=0"))
-
-    // any entry point repairs first: the backup rolls back, temp dropped
-    assert(EventTableSink.read(spark, dir).count() == 20)
-    assert(JF.exists(live))
-    assert(!JF.exists(JP.get(dir, ".old-bucket=0")))
-    assert(!JF.exists(JP.get(dir, ".tmp-123")))
-
-    // and the re-run (the crashed batch's replay) converges normally
-    val evicted = EventTableSink.retention(spark, dir, "commit_ts",
-      to_timestamp(lit("2024-01-15 00:00:00")))
-    assert(evicted == 10)
-    assert(EventTableSink.read(spark, dir)
-      .select("record_pk").collect().map(_.getString(0).toInt)
-      .sorted.toSeq == (1 to 20 by 2))
   }
 
   test("EventTableSink.compact: cold epochs coalesce; reads, change feed, time travel, lookup identical; pruning stays exact") {
@@ -799,61 +723,72 @@ class StreamingSpec extends SparkSpec {
   test("EventTableSink.compact: a crash between staging and finish converges forward — no duplicates, no loss") {
     implicit val s = spark
     import s.implicits._
-    import java.nio.file.{Files => JF, Paths => JP, Path => JPath}
+    import java.nio.file.{Files => JF, Paths => JP}
     import scala.jdk.CollectionConverters._
-    def copyTree(src: JPath, dst: JPath): Unit = {
-      val all = { val st = JF.walk(src)
-        try st.iterator().asScala.toSeq finally st.close() }
-      all.foreach { p =>
-        val t = dst.resolve(src.relativize(p).toString)
-        if (JF.isDirectory(p)) JF.createDirectories(t)
-        else { JF.createDirectories(t.getParent); JF.copy(p, t) }
-      }
-    }
     val base = JF.createTempDirectory("graft_sink_cmpcrash")
-    val live = base.resolve("events").toString
-    val crash = base.resolve("events_crash")
     val w = 16L
     val rows = (0 until 8).map(i =>
       ev(i * w + 1, 0, "7", (100 + i).toString, value = i.toDouble))
-    EventTableSink.upsert(spark, rows.toDF(), live, numBuckets = 1,
-      epochWidth = w)
-    // freeze the pre-compaction state, then compact the original
-    copyTree(JP.get(live), crash)
-    assert(EventTableSink.compact(spark, live, 100, 4) == 6)
-    val want = EventTableSink.read(spark, live)
-      .select("record_pk", "record_value").collect()
-      .map(r => (r.getString(0), r.getDouble(1))).sorted.toSeq
-    assert(want.size == 8)
-
-    // reconstruct the exact crash state on the frozen copy: group 0's
-    // staged dir (with its _sources manifest) is in place as .cmt-, the
-    // sources are still live, and one source is already half-dropped
-    JF.writeString(crash.resolve("_compaction"), "4")
-    copyTree(JP.get(live, "bucket=0", "epoch=0"),
-      crash.resolve("bucket=0").resolve(".cmt-epoch=0"))
-    def rmTree(p: JPath): Unit = {
-      val all = { val st = JF.walk(p)
-        try st.iterator().asScala.toSeq finally st.close() }
-      all.reverse.foreach(f => JF.delete(f))
+    def mkTable(name: String): String = {
+      val path = base.resolve(name).toString
+      EventTableSink.upsert(spark, rows.toDF(), path, numBuckets = 1,
+        epochWidth = w)
+      path
     }
-    rmTree(crash.resolve("bucket=0").resolve("epoch=2")) // mid-drop crash
-
-    // ANY entry point repairs: sources dropped, staged dir promoted —
-    // content identical to the cleanly-compacted table
-    val healed = EventTableSink.read(spark, crash.toString)
+    def content(path: String) = EventTableSink.read(spark, path)
       .select("record_pk", "record_value").collect()
       .map(r => (r.getString(0), r.getDouble(1))).sorted.toSeq
-    assert(healed == want, s"crash recovery diverged: $healed vs $want")
-    val names = JF.list(crash.resolve("bucket=0")).iterator().asScala
-      .map(_.getFileName.toString).toSeq.sorted
-    assert(names.count(_.startsWith("epoch=")) == 5, s"dirs: $names")
-    assert(!names.exists(_.startsWith(".cmt-")), s"staging left: $names")
-    // and the change feed over the healed table still resolves exactly
-    val pks = EventTableSink
-      .changesBetween(spark, crash.toString, 2 * w, 6 * w, epochWidth = w)
-      .select("record_pk").collect().map(_.getString(0)).sorted.toSeq
-    assert(pks == Seq("102", "103", "104", "105"), s"feed: $pks")
+    def names(path: String, dir: String) = {
+      val l = JF.list(JP.get(path, dir))
+      try l.iterator().asScala.map(_.getFileName.toString).toSeq.sorted
+      finally l.close()
+    }
+    val live = mkTable("events")
+    val before = content(live)
+    assert(EventTableSink.compact(spark, live, 100, 4) == 6)
+    val want = content(live)
+    assert(want == before && want.size == 8)
+
+    // staged, never committed: the crash rolls back to the 8 epoch dirs,
+    // and re-running the compaction converges
+    val rolled = mkTable("events_staged")
+    assert(EventTableSink.stageCompact(spark, rolled, 100, 4)._2.isDefined)
+    assert(names(rolled, "").exists(_.startsWith(".tmp-")))
+    assert(content(rolled) == before)
+    assert(names(rolled, "bucket=0").count(_.startsWith("epoch=")) == 8)
+    assert(!names(rolled, "").exists(_.startsWith(".tmp-")))
+    assert(EventTableSink.compact(spark, rolled, 100, 4) == 6)
+    assert(content(rolled) == want)
+
+    // committed, then interrupted after the first `k` renames of its
+    // finish (k = 0: committed, nothing moved yet): ANY entry point rolls
+    // it forward to the compacted table
+    def crashAfter(k: Int): (String, Int) = {
+      val c = mkTable(base.relativize(JF.createTempDirectory(base, s"crash$k")).resolve("events").toString)
+      val st = EventTableSink.stageCompact(spark, c, 100, 4)._2.get
+      val due = EventTableSink.moves(JP.get(c), EventTableSink.commit(c, st, None))
+      due.take(k).foreach(EventTableSink.move)
+      (c, due.size)
+    }
+    // two groups of 4 epochs: each moves its label dir out and the
+    // combined dir in, and drops its 3 other sources
+    val renames = crashAfter(0)._2
+    assert(renames == 10)
+    (0 until renames).foreach { k =>
+      val crash = crashAfter(k)._1
+      val healed = content(crash)
+      assert(healed == want, s"$k renames: crash recovery diverged: $healed vs $want")
+      val epochs = names(crash, "bucket=0")
+      assert(epochs == Seq("epoch=0", "epoch=4"), s"$k renames: dirs $epochs")
+      val root = names(crash, "")
+      assert(!root.exists(n => n.startsWith(".tmp-") || n.startsWith(".txn-")),
+        s"$k renames: staging left: $root")
+      // and the change feed over the healed table still resolves exactly
+      val pks = EventTableSink
+        .changesBetween(spark, crash, 2 * w, 6 * w, epochWidth = w)
+        .select("record_pk").collect().map(_.getString(0)).sorted.toSeq
+      assert(pks == Seq("102", "103", "104", "105"), s"$k renames: feed $pks")
+    }
   }
 
   test("EventTableSink epoch fencing: a superseded writer fails fast, new owner wins") {
@@ -892,7 +827,7 @@ class StreamingSpec extends SparkSpec {
     import scala.jdk.CollectionConverters._
     val leftovers = java.nio.file.Files.list(java.nio.file.Paths.get(dir))
       .iterator().asScala.map(_.getFileName.toString)
-      .filter(n => n.startsWith(".tmp-") || n.startsWith(".old-")).toSeq
+      .filter(n => n.startsWith(".tmp-") || n.startsWith(".txn-")).toSeq
     assert(leftovers.isEmpty)
 
     // B keeps working; the unfenced embedded overload is unaffected
